@@ -886,20 +886,19 @@ def main() -> None:
     # (the round-over-round diff would read the absence as a drop —
     # exactly what happened to 4 sped-up entries in round 11).
     # Additions only; the slowest-20 selection above is unchanged.
+    # The previous round is the BENCH_r<NN>.json with the highest NN;
+    # variant files (BENCH_r12_c8.json: a core-count rerun) are skipped,
+    # and a plain name sort would pick them ('_' sorts after '.').
     carry: set = set()
     try:
-        import glob
-
-        prev_arts = sorted(
-            glob.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_r*.json",
-                )
-            )
-        )
-        if prev_arts:
-            with open(prev_arts[-1]) as fh:
+        here = os.path.dirname(os.path.abspath(__file__))
+        rounds = {
+            int(m.group(1)): f
+            for f in os.listdir(here)
+            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
+        }
+        if rounds:
+            with open(os.path.join(here, rounds[max(rounds)])) as fh:
                 prev_parsed = json.load(fh).get("parsed") or {}
             carry = set((prev_parsed.get("queries") or {})) & set(med)
             for name in sorted(carry):

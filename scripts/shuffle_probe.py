@@ -38,13 +38,17 @@ PROBES = [
 
 def _stage_totals(spark) -> tuple[int, int]:
     """Cumulative (shuffle_write_bytes, shuffle_read_bytes) across all
-    stages the app has ever run, from the live AppStatusStore."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    empty = spark.sparkContext._gateway.jvm.java.util.ArrayList()
+    stages the app has ever run, from the live AppStatusStore.
+    ``stageList`` takes five arguments on pyspark 4.1 (statuses,
+    details, withSummaries, unsortedQuantiles, taskStatus)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    stages = sc._jsc.sc().statusStore().stageList(
+        None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None
+    )
     w = r = 0
-    it = store.stageList(empty).iterator()
-    while it.hasNext():
-        s = it.next()
+    for i in range(stages.size()):
+        s = stages.apply(i)
         w += s.shuffleWriteBytes()
         r += s.shuffleReadBytes()
     return w, r

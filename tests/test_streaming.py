@@ -877,3 +877,22 @@ def test_stream_stream_semi_join_emits_once(spark, tmp_path):
     q.awaitTermination()
     rows = spark.sql("SELECT * FROM attr_semi_out").collect()
     assert [(r["purchase_id"], r["amount"]) for r in rows] == [("p1", 10.0)]
+
+
+def test_maintain_rejects_repeated_keys(spark):
+    """maintain's append-only check: an ``arrive`` that maps every
+    batch to the same key must fail on the second epoch, and the
+    error must name that epoch."""
+    from yelp_streaming_etl_pipeline_spark.streaming.replay import maintain
+
+    df = spark.range(6).withColumnRenamed("id", "doc_id")
+    # foreachBatch wraps the AssertionError in a StreamingQueryException
+    with pytest.raises(Exception, match="epoch 1: doc_id 7 arrived after 7"):
+        maintain(
+            spark,
+            df,
+            lambda b: b.select(F.lit(7).alias("doc_id")),
+            lambda acc, *_: acc,
+            order_cols=["doc_id"],
+            key="doc_id",
+        )

@@ -230,10 +230,9 @@ def kmeans_maintain_stream(
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         )
         state["stats"] = merged.localCheckpoint(eager=True)
+        # lazy union of immutable per-epoch blocks (maintain's policy)
         state["pts"] = (
-            b
-            if state["pts"] is None
-            else state["pts"].unionByName(b).localCheckpoint(eager=True)
+            b if state["pts"] is None else state["pts"].unionByName(b)
         )
         n_acc = state["pts"].count()
         counted = (
@@ -263,6 +262,5 @@ def kmeans_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=[id_col],
-        prefix="kmeans_",
     )
     return state["result"]

@@ -358,6 +358,16 @@ def dsir_importance(
         .agg(F.count("*").cast("long").alias("cnt"))
         .localCheckpoint(eager=False)  # <= |docs| x n_buckets narrow rows
     )
+    return _dsir_scores(c_t, counts, n_buckets)
+
+
+def _dsir_scores(
+    c_t: DataFrame, counts: DataFrame, n_buckets: int
+) -> DataFrame:
+    """(doc_id, n_grams, dsir_score) from the target bucket counts
+    ``c_t`` (b, ct) and the raw per-(doc, bucket) counts ``counts``
+    (doc_id, b, cnt) — the scoring tail shared by the batch and
+    streaming DSIR entries."""
     c_r = counts.groupBy("b").agg(F.sum("cnt").cast("long").alias("cr"))
     weights, const = _dsir_weights(c_t, c_r, n_buckets)
     return (
@@ -468,7 +478,7 @@ def dsir_maintain_stream(
 
     Final epoch equals batch dsir_importance over all arrived raw
     docs, so the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
 
     c_t = (
         _hashed_gram_buckets(target, text_col, id_col, n_buckets)
@@ -476,63 +486,17 @@ def dsir_maintain_stream(
         .agg(F.count("*").alias("ct"))
         .localCheckpoint(eager=True)
     )
-    state: dict = {"counts": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = (
-            _hashed_gram_buckets(batch_df, text_col, id_col, n_buckets)
-            .groupBy("doc_id", "b")
-            .agg(F.count("*").cast("long").alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
-        if state["counts"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["counts"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"dsir_maintain_stream: epoch {epoch_id} re-hashed "
-                    f"{n_overlap} already-scored doc(s) — bucket-count "
-                    "state must be append-only per doc"
-                )
-            acc = state["counts"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["counts"] = acc
-        c_r = acc.groupBy("b").agg(
-            F.sum("cnt").cast("long").alias("cr")
-        )
-        weights, const = _dsir_weights(c_t, c_r, n_buckets)
-        state["result"] = (
-            acc.join(F.broadcast(weights), "b")
-            .groupBy("doc_id")
-            .agg(
-                F.sum("cnt").cast("long").alias("n_grams"),
-                F.sum(F.col("cnt") * F.col("w")).alias("_sw"),
-            )
-            .crossJoin(F.broadcast(const))
-            .select(
-                "doc_id",
-                "n_grams",
-                (F.col("_sw") + F.col("n_grams") * F.col("cq"))
-                .cast("long")
-                .alias("dsir_score"),
-            )
-        )
-
-    replay_fold(
+    return maintain(
         spark,
         raw.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _hashed_gram_buckets(b, text_col, id_col, n_buckets)
+        .groupBy("doc_id", "b")
+        .agg(F.count("*").cast("long").alias("cnt")),
+        lambda acc, *_: _dsir_scores(c_t, acc, n_buckets),
         order_cols=[id_col],
-        prefix="dsirm_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]
 
 
 def dsir_topk(
@@ -793,7 +757,7 @@ def dsir_mixture_pack_maintain_stream(
 
     Final epoch equals batch dsir_mixture_pack over all arrived
     docs, so the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import check_ordered_arrival, replay_fold
 
     c_t = (
         _hashed_gram_buckets(target, text_col, id_col, n_buckets)
@@ -801,7 +765,7 @@ def dsir_mixture_pack_maintain_stream(
         .agg(F.count("*").alias("ct"))
         .localCheckpoint(eager=True)
     )
-    state: dict = {"counts": None, "toks": None, "result": None}
+    state: dict = {"counts": None, "toks": None, "max_id": None, "result": None}
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         fresh = (
@@ -815,47 +779,18 @@ def dsir_mixture_pack_maintain_stream(
             F.col(group_col).alias("g"),
             bpe_token_count(F.col(text_col)).cast("long").alias("tokens"),
         ).localCheckpoint(eager=True)
-        if state["counts"] is None:
-            acc, acc_toks = fresh, fresh_toks
-        else:
-            n_overlap = (
-                state["counts"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"dsir_mixture_pack_maintain_stream: epoch "
-                    f"{epoch_id} re-hashed {n_overlap} already-scored "
-                    "doc(s) — state must be append-only per doc"
-                )
-            acc = state["counts"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-            acc_toks = (
-                state["toks"].unionByName(fresh_toks).localCheckpoint(
-                    eager=True
-                )
-            )
-        state["counts"], state["toks"] = acc, acc_toks
-        c_r = acc.groupBy("b").agg(
-            F.sum("cnt").cast("long").alias("cr")
+        state["max_id"] = check_ordered_arrival(
+            fresh, "doc_id", state["max_id"], epoch_id
         )
-        weights, const = _dsir_weights(c_t, c_r, n_buckets)
+        # lazy unions of immutable per-epoch blocks (maintain's policy)
+        acc, acc_toks = fresh, fresh_toks
+        if state["counts"] is not None:
+            acc = state["counts"].unionByName(fresh)
+            acc_toks = state["toks"].unionByName(fresh_toks)
+        state["counts"], state["toks"] = acc, acc_toks
         scores = (
-            acc.join(F.broadcast(weights), "b")
-            .groupBy("doc_id")
-            .agg(
-                F.sum("cnt").cast("long").alias("n_grams"),
-                F.sum(F.col("cnt") * F.col("w")).alias("_sw"),
-            )
-            .crossJoin(F.broadcast(const))
-            .select(
-                "doc_id",
-                (F.col("_sw") + F.col("n_grams") * F.col("cq"))
-                .cast("long")
-                .alias("dsir_score"),
-            )
+            _dsir_scores(c_t, acc, n_buckets)
+            .select("doc_id", "dsir_score")
             .localCheckpoint(eager=True)
         )
         state["result"] = _dsir_mixture_pack_from_scores(
@@ -868,7 +803,6 @@ def dsir_mixture_pack_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=[id_col],
-        prefix="dsmp_",
     )
     return state["result"]
 

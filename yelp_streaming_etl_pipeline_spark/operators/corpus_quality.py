@@ -572,6 +572,14 @@ def _doc_bigrams(
     ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
 
 
+def _bigram_counts(bigrams: DataFrame) -> DataFrame:
+    """The distinct-bigram count table (w1, w2, cb) — the whole model
+    state of both bigram LMs."""
+    return bigrams.groupBy("w1", "w2").agg(
+        F.count("*").cast("long").alias("cb")
+    )
+
+
 def bigram_lm_scores(
     reference: DataFrame,
     scored: DataFrame,
@@ -595,9 +603,7 @@ def bigram_lm_scores(
     broadcast when the reference is small — and one doc_id-keyed
     aggregate finishes. No pair join, no window, no float log."""
     counts = (
-        _doc_bigrams(reference, text_col, id_col)
-        .groupBy("w1", "w2")
-        .agg(F.count("*").cast("long").alias("cb"))
+        _bigram_counts(_doc_bigrams(reference, text_col, id_col))
         # the readout consumes the model table three times (prefix
         # totals, the weight join's build side, the OOV floor), and
         # different downstream keys defeat exchange reuse — without
@@ -688,55 +694,20 @@ def bigram_lm_maintain_stream(
 
     Final epoch equals batch bigram_lm_scores over the whole
     reference, so the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import count_merge, maintain
 
     sbg = _doc_bigrams(scored, text_col, id_col).localCheckpoint(
         eager=True
     )
-    state: dict = {"counts": None, "mass": 0, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = (
-            _doc_bigrams(batch_df, text_col, id_col)
-            .groupBy("w1", "w2")
-            .agg(F.count("*").cast("long").alias("cb"))
-            .localCheckpoint(eager=True)
-        )
-        # bounded driver pulls: two 1-row mass scalars per epoch
-        state["mass"] += (
-            fresh.agg(F.coalesce(F.sum("cb"), F.lit(0))).collect()[0][0]
-        )
-        if state["counts"] is None:
-            acc = fresh
-        else:
-            acc = (
-                state["counts"]
-                .unionByName(fresh)
-                .groupBy("w1", "w2")
-                .agg(F.sum("cb").cast("long").alias("cb"))
-                .localCheckpoint(eager=True)
-            )
-        acc_mass = (
-            acc.agg(F.coalesce(F.sum("cb"), F.lit(0))).collect()[0][0]
-        )
-        if acc_mass != state["mass"]:
-            raise AssertionError(
-                f"bigram_lm_maintain_stream: epoch {epoch_id} state "
-                f"mass {acc_mass} != arrived mass {state['mass']} — "
-                "the count merge must conserve bigram mass"
-            )
-        state["counts"] = acc
-        state["result"] = _bigram_lm_readout(acc, sbg)
-
-    replay_fold(
+    return maintain(
         spark,
         reference.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _bigram_counts(_doc_bigrams(b, text_col, id_col)),
+        lambda acc, *_: _bigram_lm_readout(acc, sbg),
         order_cols=[id_col],
-        prefix="blm_",
+        n_slices=n_slices,
+        merge=count_merge(["w1", "w2"], "cb"),
     )
-    return state["result"]
 
 
 KN_SCALE_BITS = 16  # exact floor(log2(num/den)) down to 2^-16
@@ -785,9 +756,7 @@ def kn_bigram_scores(
     equi-joins them (AQE broadcasts small models) and one doc-keyed
     aggregate finishes. No pair join, no window, no float log."""
     big = (
-        _doc_bigrams(reference, text_col, id_col)
-        .groupBy("w1", "w2")
-        .agg(F.count("*").cast("long").alias("cb"))
+        _bigram_counts(_doc_bigrams(reference, text_col, id_col))
         # _kn_readout consumes the pair-count table four times (uni
         # totals/fanouts, fanins, type count, the scored join) under
         # different keys — materialize the vocabulary-sized table once
@@ -884,54 +853,20 @@ def kn_bigram_maintain_stream(
     scored doc — so each epoch re-reads the accumulated table
     through _kn_readout. Final epoch equals batch kn_bigram_scores,
     so the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import count_merge, maintain
 
     sbg = _doc_bigrams(scored, text_col, id_col).localCheckpoint(
         eager=True
     )
-    state: dict = {"counts": None, "mass": 0, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = (
-            _doc_bigrams(batch_df, text_col, id_col)
-            .groupBy("w1", "w2")
-            .agg(F.count("*").cast("long").alias("cb"))
-            .localCheckpoint(eager=True)
-        )
-        state["mass"] += (
-            fresh.agg(F.coalesce(F.sum("cb"), F.lit(0))).collect()[0][0]
-        )
-        if state["counts"] is None:
-            acc = fresh
-        else:
-            acc = (
-                state["counts"]
-                .unionByName(fresh)
-                .groupBy("w1", "w2")
-                .agg(F.sum("cb").cast("long").alias("cb"))
-                .localCheckpoint(eager=True)
-            )
-        acc_mass = (
-            acc.agg(F.coalesce(F.sum("cb"), F.lit(0))).collect()[0][0]
-        )
-        if acc_mass != state["mass"]:
-            raise AssertionError(
-                f"kn_bigram_maintain_stream: epoch {epoch_id} state "
-                f"mass {acc_mass} != arrived mass {state['mass']} — "
-                "the count merge must conserve bigram mass"
-            )
-        state["counts"] = acc
-        state["result"] = _kn_readout(acc, sbg)
-
-    replay_fold(
+    return maintain(
         spark,
         reference.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _bigram_counts(_doc_bigrams(b, text_col, id_col)),
+        lambda acc, *_: _kn_readout(acc, sbg),
         order_cols=[id_col],
-        prefix="knb_",
+        n_slices=n_slices,
+        merge=count_merge(["w1", "w2"], "cb"),
     )
-    return state["result"]
 
 
 # ---------------- threshold-sweep filter evaluation (ROC table) ----------------

@@ -576,7 +576,6 @@ def simhash_maintain_stream(
     max_hamming: int = SIMHASH_MAX_HAMMING,
     hot_threshold: int = SIMHASH_HOT_BUCKET,
     n_slices: int = 3,
-    check_invariants: bool = False,
 ) -> DataFrame:
     """Streaming SimHash near-dup MAINTENANCE — the last dedup family
     to gain one: each arriving document is signature-hashed exactly
@@ -593,53 +592,21 @@ def simhash_maintain_stream(
     accumulated signature table — band-keyed equi-joins over 64-bit
     signatures with the same hot-bucket sub-banding as batch, never
     text. Final epoch equals batch simhash_pairs over all docs, so
-    the entry shares its oracle twin.
+    the entry shares its oracle twin. Append-only-per-doc asserted
+    per epoch (ordered arrival)."""
+    from ..streaming.replay import maintain
 
-    ``check_invariants`` (ADVICE r8: debug-gated, default off — it
-    costs a full state join + driver-blocking count per epoch) makes
-    the append-only-per-doc precondition an AssertionError instead of
-    a silent assumption; the regression tests run with it on."""
-    from functools import reduce
-
-    from ..streaming.replay import replay_fold
-
-    state: dict = {"sig_parts": [], "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = simhash_table(batch_df, text_col, id_col).localCheckpoint(
-            eager=True
-        )
-        if state["sig_parts"]:
-            prev = reduce(DataFrame.unionByName, state["sig_parts"])
-            if check_invariants:
-                n_overlap = (
-                    prev.select("doc_id")
-                    .join(fresh.select("doc_id"), "doc_id")
-                    .count()
-                )
-                if n_overlap:
-                    raise AssertionError(
-                        f"simhash_maintain_stream: epoch {epoch_id} "
-                        f"re-hashed {n_overlap} already-seen doc(s) — "
-                        "signature state must be append-only per doc"
-                    )
-            acc = prev.unionByName(fresh)
-        else:
-            acc = fresh
-        state["sig_parts"].append(fresh)
-        state["result"] = _simhash_candidates(
-            _simhash_banded(acc), hot_threshold
-        ).filter(F.col("hamming") <= max_hamming)
-
-    replay_fold(
+    return maintain(
         spark,
         df.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: simhash_table(b, text_col, id_col),
+        lambda acc, *_: _simhash_candidates(
+            _simhash_banded(acc), hot_threshold
+        ).filter(F.col("hamming") <= max_hamming),
         order_cols=[id_col],
-        prefix="shm_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]
 
 
 def ngram_jaccard_pairs(
@@ -1073,46 +1040,19 @@ def cdc_maintain_stream(
 
     Final epoch equals batch cdc_chunk_pairs over all docs, so the
     entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
 
-    state: dict = {"sets": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = (
-            cdc_chunks(batch_df, text_col, id_col, min_len)
-            .select("doc_id", F.md5("chunk").alias("chunk_hash"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if state["sets"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["sets"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"cdc_maintain_stream: epoch {epoch_id} re-chunked "
-                    f"{n_overlap} already-chunked doc(s) — chunk state "
-                    "must be append-only per doc"
-                )
-            acc = state["sets"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["sets"] = acc
-        state["result"] = _pairs_from_chunk_sets(acc, max_df, min_shared)
-
-    replay_fold(
+    return maintain(
         spark,
         df.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: cdc_chunks(b, text_col, id_col, min_len)
+        .select("doc_id", F.md5("chunk").alias("chunk_hash"))
+        .distinct(),
+        lambda acc, *_: _pairs_from_chunk_sets(acc, max_df, min_shared),
         order_cols=[id_col],
-        prefix="cdc_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]
 
 
 def _cdc_chunks_pos(
@@ -1257,7 +1197,7 @@ def cdc_chunk_dedup_maintain_stream(
     equals batch cdc_chunk_dedup, so the entry shares its twin."""
     from functools import reduce
 
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import check_ordered_arrival, replay_fold
 
     state: dict = {"seen_parts": [], "max_id": None, "result_parts": []}
 
@@ -1265,23 +1205,9 @@ def cdc_chunk_dedup_maintain_stream(
         chunks = _cdc_chunks_pos(
             batch_df, text_col, id_col
         ).localCheckpoint(eager=True)
-        lo_hi = batch_df.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).collect()[0]
-        if state["max_id"] is not None and lo_hi["lo"] is not None:
-            if lo_hi["lo"] <= state["max_id"]:
-                raise AssertionError(
-                    f"cdc_chunk_dedup_maintain_stream: epoch {epoch_id} "
-                    f"doc_id {lo_hi['lo']} arrived after "
-                    f"{state['max_id']} — keep-first is append-only "
-                    "under ordered arrival only"
-                )
-        if lo_hi["hi"] is not None:
-            state["max_id"] = (
-                lo_hi["hi"]
-                if state["max_id"] is None
-                else max(state["max_id"], lo_hi["hi"])
-            )
+        state["max_id"] = check_ordered_arrival(
+            batch_df, id_col, state["max_id"], epoch_id
+        )
         kept = _chunk_keep_first(chunks)
         if state["seen_parts"]:
             seen = reduce(DataFrame.unionByName, state["seen_parts"])
@@ -1300,7 +1226,6 @@ def cdc_chunk_dedup_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=[id_col],
-        prefix="cdcd_",
     )
     if not state["result_parts"]:
         id_type = df.schema[id_col].dataType.simpleString()
@@ -1471,7 +1396,7 @@ def cdc_maintain_stream_bpe(
     with the expensive tokenize+rolling-hash scan incremental. Final
     epoch equals batch cdc_chunk_pairs_bpe (the fixed vocab is the
     one batch trains), so the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
     from .tokenizer import bpe_learn, export_bpe
 
     merges, vocab = bpe_learn(df, text_col, n_merges, "char")
@@ -1479,44 +1404,20 @@ def cdc_maintain_stream_bpe(
         _, vocab_path = export_bpe(merges, vocab, export_path)
         vocab = spark.read.parquet(vocab_path)
     vocab = vocab.localCheckpoint(eager=True)
-    state: dict = {"sets": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = _bpe_piece_chunk_sets(
-            bpe_token_stream(batch_df, vocab, text_col, id_col),
+    return maintain(
+        spark,
+        df.select(F.col(id_col), F.col(text_col)),
+        lambda b: _bpe_piece_chunk_sets(
+            bpe_token_stream(b, vocab, text_col, id_col),
             CDC_GRAM_BPE,
             CDC_MOD_BPE,
             min_len,
-        ).localCheckpoint(eager=True)
-        if state["sets"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["sets"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"cdc_maintain_stream_bpe: epoch {epoch_id} "
-                    f"re-chunked {n_overlap} already-chunked doc(s) — "
-                    "chunk state must be append-only per doc"
-                )
-            acc = state["sets"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["sets"] = acc
-        state["result"] = _pairs_from_chunk_sets(acc, max_df, min_shared)
-
-    replay_fold(
-        spark,
-        df.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        ),
+        lambda acc, *_: _pairs_from_chunk_sets(acc, max_df, min_shared),
         order_cols=[id_col],
-        prefix="cdcb_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]
 
 
 def duplicated_passages(
@@ -1755,8 +1656,8 @@ def neardup_maintain_stream(
     size (the naive recompute re-signs and re-joins the whole corpus
     every epoch — quadratic-in-epochs total work at 100 TB ingest).
 
-    State is three dictionary-shaped tables, localCheckpointed per
-    epoch (a compacted keyed state table in production):
+    State is three dictionary-shaped tables, held as checkpointed
+    per-epoch blocks (a compacted keyed state table in production):
     - docs  (doc_id, shingles)   — one row per doc, shingles stored
       ONCE (not x LSH_BANDS as the batch path's banded cache does);
     - bands (doc_id, band_key)   — LSH_BANDS rows per doc;
@@ -1790,20 +1691,11 @@ def neardup_maintain_stream(
         fresh_bands = base.select(
             "doc_id", F.explode(lsh_band_keys(F.col("sig"))).alias("band_key")
         ).localCheckpoint(eager=True)
-        acc_docs = (
-            fresh_docs
-            if state["docs"] is None
-            else state["docs"].unionByName(fresh_docs).localCheckpoint(
-                eager=True
-            )
-        )
-        acc_bands = (
-            fresh_bands
-            if state["bands"] is None
-            else state["bands"].unionByName(fresh_bands).localCheckpoint(
-                eager=True
-            )
-        )
+        # lazy unions of immutable per-epoch blocks (maintain's policy)
+        acc_docs, acc_bands = fresh_docs, fresh_bands
+        if state["docs"] is not None:
+            acc_docs = state["docs"].unionByName(fresh_docs)
+            acc_bands = state["bands"].unionByName(fresh_bands)
         cand = (
             fresh_bands.alias("a")
             .join(
@@ -1850,7 +1742,6 @@ def neardup_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=[id_col],
-        prefix="neardup_",
     )
     return state["pairs"]
 
@@ -2186,45 +2077,19 @@ def exact_substring_maintain_stream(
 
     Final epoch equals batch exact_substring_spans over all docs, so
     the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
 
-    state: dict = {"wins": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = _window_hash_table(
-            batch_df, text_col, id_col, L
-        ).localCheckpoint(eager=True)
-        if state["wins"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["wins"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"exact_substring_maintain_stream: epoch {epoch_id} "
-                    f"re-windowed {n_overlap} already-seen doc(s) — "
-                    "window state must be append-only per doc"
-                )
-            acc = state["wins"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["wins"] = acc
-        state["result"] = _spans_from_cov(
-            _cov_from_window_table(acc, min_occ), L
-        )
-
-    replay_fold(
+    return maintain(
         spark,
         df.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _window_hash_table(b, text_col, id_col, L),
+        lambda acc, *_: _spans_from_cov(
+            _cov_from_window_table(acc, min_occ), L
+        ),
         order_cols=[id_col],
-        prefix="exs_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]
 
 
 EXSPAN_BL = 32  # byte-level duplicated-substring threshold, in BYTES
@@ -2615,7 +2480,7 @@ def exact_substring_maintain_stream_bpe(
     maintenance entry does), so the final epoch equals batch
     exact_substring_spans_bpe and the entry shares its oracle twin
     — in production the artifact would predate the stream."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
     from .tokenizer import bpe_learn, export_bpe
 
     merges, vocab = bpe_learn(df, text_col, n_merges, "char")
@@ -2623,45 +2488,20 @@ def exact_substring_maintain_stream_bpe(
         _, vocab_path = export_bpe(merges, vocab, export_path)
         vocab = spark.read.parquet(vocab_path)
     vocab = vocab.localCheckpoint(eager=True)
-
-    state: dict = {"wins": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        toks = bpe_token_stream(batch_df, vocab, text_col, id_col)
-        fresh = _array_window_hash_table(toks, L).localCheckpoint(
-            eager=True
-        )
-        if state["wins"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["wins"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"exact_substring_maintain_stream_bpe: epoch "
-                    f"{epoch_id} re-windowed {n_overlap} already-seen "
-                    "doc(s) — window state must be append-only per doc"
-                )
-            acc = state["wins"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["wins"] = acc
-        state["result"] = _spans_from_cov(
-            _cov_from_window_table(acc, min_occ), L
-        )
-
-    replay_fold(
+    spans = maintain(
         spark,
         df.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _array_window_hash_table(
+            bpe_token_stream(b, vocab, text_col, id_col), L
+        ),
+        lambda acc, *_: _spans_from_cov(
+            _cov_from_window_table(acc, min_occ), L
+        ),
         order_cols=[id_col],
-        prefix="exsb_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"].select(
+    return spans.select(
         "doc_id",
         "span_id",
         F.col("start_pos").alias("start_tok"),
@@ -2698,7 +2538,7 @@ def exact_substring_removal_maintain_stream_bpe(
     tail. Append-only-per-doc invariant asserted on the window
     state. Final epoch equals batch exact_substring_removal_bpe,
     sharing its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import check_ordered_arrival, replay_fold
     from .tokenizer import bpe_learn, export_bpe
 
     merges, vocab = bpe_learn(df, text_col, n_merges, "char")
@@ -2707,42 +2547,23 @@ def exact_substring_removal_maintain_stream_bpe(
         vocab = spark.read.parquet(vocab_path)
     vocab = vocab.localCheckpoint(eager=True)
 
-    state: dict = {"toks": None, "wins": None, "result": None}
+    state: dict = {"toks": None, "wins": None, "max_id": None, "result": None}
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        toks_fresh = bpe_token_stream(
+        toks = bpe_token_stream(
             batch_df, vocab, text_col, id_col
         ).localCheckpoint(eager=True)
-        wins_fresh = _array_window_hash_table(
-            toks_fresh, L
-        ).localCheckpoint(eager=True)
-        if state["wins"] is None:
-            toks_acc, wins_acc = toks_fresh, wins_fresh
-        else:
-            n_overlap = (
-                state["wins"].select("doc_id").distinct()
-                .join(wins_fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"exact_substring_removal_maintain_stream_bpe: "
-                    f"epoch {epoch_id} re-windowed {n_overlap} "
-                    "already-seen doc(s) — state must be append-only "
-                    "per doc"
-                )
-            toks_acc = state["toks"].unionByName(
-                toks_fresh
-            ).localCheckpoint(eager=True)
-            wins_acc = state["wins"].unionByName(
-                wins_fresh
-            ).localCheckpoint(eager=True)
-        state["toks"], state["wins"] = toks_acc, wins_acc
+        wins = _array_window_hash_table(toks, L).localCheckpoint(eager=True)
+        state["max_id"] = check_ordered_arrival(
+            wins, "doc_id", state["max_id"], epoch_id
+        )
+        # lazy unions of immutable per-epoch blocks (maintain's policy)
+        if state["wins"] is not None:
+            toks = state["toks"].unionByName(toks)
+            wins = state["wins"].unionByName(wins)
+        state["toks"], state["wins"] = toks, wins
         state["result"] = _removal_from_toks_and_spans(
-            toks_acc,
-            _spans_from_cov(
-                _cov_from_window_table(wins_acc, min_occ), L
-            ),
+            toks, _spans_from_cov(_cov_from_window_table(wins, min_occ), L)
         )
 
     replay_fold(
@@ -2751,7 +2572,6 @@ def exact_substring_removal_maintain_stream_bpe(
         fold,
         n_slices=n_slices,
         order_cols=[id_col],
-        prefix="exrb_",
     )
     return state["result"]
 
@@ -3006,7 +2826,7 @@ def paragraph_dedup_maintain_stream(
     entry shares its oracle twin."""
     from functools import reduce
 
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import check_ordered_arrival, replay_fold
 
     state: dict = {"seen_parts": [], "max_id": None, "result_parts": []}
 
@@ -3014,23 +2834,9 @@ def paragraph_dedup_maintain_stream(
         paras = _paragraphs(batch_df, text_col, id_col).localCheckpoint(
             eager=True
         )
-        lo_hi = batch_df.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).collect()[0]
-        if state["max_id"] is not None and lo_hi["lo"] is not None:
-            if lo_hi["lo"] <= state["max_id"]:
-                raise AssertionError(
-                    f"paragraph_dedup_maintain_stream: epoch {epoch_id} "
-                    f"doc_id {lo_hi['lo']} arrived after "
-                    f"{state['max_id']} — keep-first is append-only "
-                    "under ordered arrival only"
-                )
-        if lo_hi["hi"] is not None:
-            state["max_id"] = (
-                lo_hi["hi"]
-                if state["max_id"] is None
-                else max(state["max_id"], lo_hi["hi"])
-            )
+        state["max_id"] = check_ordered_arrival(
+            batch_df, id_col, state["max_id"], epoch_id
+        )
         kept = _keep_first(paras)
         if state["seen_parts"]:
             # lazy union of immutable epoch blocks — an O(state) READ
@@ -3050,7 +2856,6 @@ def paragraph_dedup_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=[id_col],
-        prefix="pgd_",
     )
     if not state["result_parts"]:
         # zero epochs (empty corpus): an EMPTY result with the real

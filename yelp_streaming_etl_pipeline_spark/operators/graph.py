@@ -859,6 +859,43 @@ def cosupply_kcore(
     )
 
 
+def _nodes(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """Distinct endpoint set (node) of an edge/pair table."""
+    return (
+        edges.select(F.col(a).alias("node"))
+        .unionAll(edges.select(F.col(b).alias("node")))
+        .distinct()
+    )
+
+
+def _assert_total(
+    entry: str, epoch_id: int, out: DataFrame, nodes: DataFrame
+) -> None:
+    """Per-epoch totality: exactly one ``out`` row per accumulated node."""
+    n_out, n_nodes = out.count(), nodes.count()
+    if n_out != n_nodes:
+        raise AssertionError(
+            f"{entry}: epoch {epoch_id} covered {n_out} of {n_nodes} "
+            "accumulated nodes — the per-node table must stay total"
+        )
+
+
+def _checked_ranks(
+    entry: str, epoch_id: int, pr: DataFrame, nodes: DataFrame
+) -> DataFrame:
+    """Per-epoch PageRank invariants, then ``pr``: totality, and
+    sum(rank_fp) <= PR_SCALE — integer flooring only ever LOSES mass,
+    so a larger total means double-counted nodes."""
+    _assert_total(entry, epoch_id, pr, nodes)
+    mass = pr.agg(F.sum("rank_fp")).collect()[0][0]
+    if mass > PR_SCALE:
+        raise AssertionError(
+            f"{entry}: epoch {epoch_id} total rank mass {mass} exceeds "
+            f"PR_SCALE {PR_SCALE} — integer flooring can only lose mass"
+        )
+    return pr
+
+
 def kcore_maintain_stream(
     spark,
     edges: DataFrame,
@@ -881,17 +918,18 @@ def kcore_maintain_stream(
     rather than returning a non-core.
 
     State story at 100 TB: the accumulated edge list is the
-    streaming state — here a chain of localCheckpointed unions (one
-    materialized table per epoch), in production a compacted state
-    table (Delta/Hudi or the RocksDB store) keyed by (u, v) so
-    replays are idempotent; the per-epoch recompute touches only
+    streaming state — here a lazy union of immutable per-epoch
+    checkpointed blocks (streaming/replay.py maintain), in production
+    a compacted state table (Delta/Hudi or the RocksDB store) keyed
+    by (u, v) so replays are idempotent; the per-epoch recompute touches only
     |E_acc| with the same bounded-rounds cost as batch kcore_nodes.
 
     Returns the FINAL epoch's core — identical by construction to
     batch kcore_nodes over all edges, so the entry shares the batch
     oracle twin."""
+    from ..streaming.replay import maintain
 
-    def per_epoch(acc: DataFrame, prev, epoch_id: int) -> DataFrame:
+    def readout(acc: DataFrame, prev, epoch_id: int) -> DataFrame:
         core = kcore_nodes(acc, k=k, rounds=rounds)
         if prev is not None:
             # the monotone-growth invariant: every node of the prior
@@ -907,42 +945,14 @@ def kcore_maintain_stream(
                 )
         return core
 
-    return _edge_stream_fold(spark, edges, per_epoch, n_slices)
-
-
-def _edge_stream_fold(
-    spark, edges: DataFrame, per_epoch, n_slices: int = 3
-) -> DataFrame:
-    """Shared streaming-graph-maintenance harness: replay ``edges``
-    as ``n_slices`` mtime-ordered micro-batches; per epoch, fold the
-    new edges into the accumulated state and call
-    ``per_epoch(acc_edges, prev_result, epoch_id)``. Returns the
-    final epoch's result. The accumulated edge list is the streaming
-    state (localCheckpointed per epoch; a compacted keyed state table
-    in production). Staging/replay: streaming/replay.py."""
-    from ..streaming.replay import replay_fold
-
-    state: dict = {"edges": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        b = batch_df.localCheckpoint(eager=True)
-        acc = (
-            b
-            if state["edges"] is None
-            else state["edges"].unionByName(b).localCheckpoint(eager=True)
-        )
-        state["edges"] = acc
-        state["result"] = per_epoch(acc, state["result"], epoch_id)
-
-    replay_fold(
+    return maintain(
         spark,
         edges.select("u", "v"),
-        fold,
-        n_slices=n_slices,
+        lambda b: b,
+        readout,
         order_cols=["u", "v"],
-        prefix="edges_",
+        n_slices=n_slices,
     )
-    return state["result"]
 
 
 def lpa_maintain_stream(
@@ -963,25 +973,23 @@ def lpa_maintain_stream(
 
     Final epoch equals batch label_propagation over all edges, so
     the entry shares the batch unrolled-CTE oracle twin."""
+    from ..streaming.replay import maintain
 
-    def per_epoch(acc: DataFrame, prev, epoch_id: int) -> DataFrame:
+    def readout(acc: DataFrame, _prev, epoch_id: int) -> DataFrame:
         labels = label_propagation(acc, rounds=rounds)
-        n_nodes = (
-            acc.select(F.col("u").alias("n"))
-            .unionAll(acc.select(F.col("v").alias("n")))
-            .distinct()
-            .count()
+        _assert_total(
+            "lpa_maintain_stream", epoch_id, labels, _nodes(acc, "u", "v")
         )
-        n_labeled = labels.count()
-        if n_labeled != n_nodes:
-            raise AssertionError(
-                f"lpa_maintain_stream: epoch {epoch_id} labeled "
-                f"{n_labeled} of {n_nodes} accumulated nodes — the "
-                "label table must stay total"
-            )
         return labels
 
-    return _edge_stream_fold(spark, edges, per_epoch, n_slices)
+    return maintain(
+        spark,
+        edges.select("u", "v"),
+        lambda b: b,
+        readout,
+        order_cols=["u", "v"],
+        n_slices=n_slices,
+    )
 
 
 def pagerank_maintain_stream(
@@ -1003,7 +1011,7 @@ def pagerank_maintain_stream(
     start changes what those sweeps produce — per-epoch recompute is
     the only strategy whose final epoch provably equals the batch
     operator. The incremental part is the edge state (new pairs only
-    are staged per epoch, the accumulated table is checkpointed),
+    are staged per epoch, each epoch's block is checkpointed),
     and the per-epoch cost carries pagerank's own disciplines:
     pre-partitioned persisted edges, iteration-invariant node table,
     linear plan growth.
@@ -1015,50 +1023,21 @@ def pagerank_maintain_stream(
 
     Final epoch equals batch ``pagerank`` over all pairs, so entries
     share the batch unrolled-CTE oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
 
-    state: dict = {"pairs": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        b = batch_df.localCheckpoint(eager=True)
-        acc = (
-            b
-            if state["pairs"] is None
-            else state["pairs"].unionByName(b).localCheckpoint(eager=True)
-        )
-        state["pairs"] = acc
-        pr = pagerank(_symmetrize(acc), iters=iters)
-        n_nodes = (
-            acc.select(F.col("a").alias("n"))
-            .unionAll(acc.select(F.col("b").alias("n")))
-            .distinct()
-            .count()
-        )
-        n_ranked = pr.count()
-        if n_ranked != n_nodes:
-            raise AssertionError(
-                f"pagerank_maintain_stream: epoch {epoch_id} ranked "
-                f"{n_ranked} of {n_nodes} accumulated nodes — the rank "
-                "table must stay total"
-            )
-        mass = pr.agg(F.sum("rank_fp").alias("m")).collect()[0]["m"]
-        if mass > PR_SCALE:
-            raise AssertionError(
-                f"pagerank_maintain_stream: epoch {epoch_id} total "
-                f"rank mass {mass} exceeds PR_SCALE {PR_SCALE} — "
-                "integer flooring can only lose mass"
-            )
-        state["result"] = pr
-
-    replay_fold(
+    return maintain(
         spark,
         pairs.select("a", "b"),
-        fold,
-        n_slices=n_slices,
+        lambda b: b,
+        lambda acc, _prev, epoch_id: _checked_ranks(
+            "pagerank_maintain_stream",
+            epoch_id,
+            pagerank(_symmetrize(acc), iters=iters),
+            _nodes(acc),
+        ),
         order_cols=["a", "b"],
-        prefix="prm_",
+        n_slices=n_slices,
     )
-    return state["result"]
 
 
 def _symmetrize_w(counts: DataFrame) -> DataFrame:
@@ -1091,73 +1070,32 @@ def pagerank_weighted_maintain_stream(
     batch contract).
 
     Per-epoch invariants ASSERTED:
-    - weight-mass conservation: sum(w) equals the occurrences
-      arrived so far (the count merge lost nothing);
+    - weight-mass conservation: the count merge keeps sum(w) equal
+      to the occurrences arrived so far (replay.count_merge);
     - totality: one rank row per accumulated node;
     - rank-mass conservation: sum(rank_fp) <= PR_SCALE.
 
     Final epoch equals batch ``pagerank(weight_col='w')`` over the
     full multiplicity aggregate, so the entry shares the batch
     weighted twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import count_merge, maintain
 
-    state: dict = {"counts": None, "occ": 0, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        b = batch_df.localCheckpoint(eager=True)
-        state["occ"] += b.count()
-        fresh = (
-            b.groupBy("a", "b")
-            .agg(F.count("*").cast("long").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-        if state["counts"] is None:
-            acc = fresh
-        else:
-            acc = (
-                state["counts"]
-                .unionByName(fresh)
-                .groupBy("a", "b")
-                .agg(F.sum("w").cast("long").alias("w"))
-                .localCheckpoint(eager=True)
-            )
-        mass = acc.agg(F.coalesce(F.sum("w"), F.lit(0))).collect()[0][0]
-        if mass != state["occ"]:
-            raise AssertionError(
-                f"pagerank_weighted_maintain_stream: epoch {epoch_id} "
-                f"state weight mass {mass} != arrived occurrences "
-                f"{state['occ']} — the count merge must conserve mass"
-            )
-        state["counts"] = acc
-        pr = pagerank(_symmetrize_w(acc), iters=iters, weight_col="w")
-        n_nodes = (
-            acc.select(F.col("a").alias("n"))
-            .unionAll(acc.select(F.col("b").alias("n")))
-            .distinct()
-            .count()
-        )
-        if pr.count() != n_nodes:
-            raise AssertionError(
-                f"pagerank_weighted_maintain_stream: epoch {epoch_id} "
-                "rank table must stay total"
-            )
-        rmass = pr.agg(F.sum("rank_fp")).collect()[0][0]
-        if rmass > PR_SCALE:
-            raise AssertionError(
-                f"pagerank_weighted_maintain_stream: epoch {epoch_id} "
-                f"rank mass {rmass} exceeds PR_SCALE"
-            )
-        state["result"] = pr
-
-    replay_fold(
+    return maintain(
         spark,
         pair_occurrences.select("a", "b"),
-        fold,
-        n_slices=n_slices,
+        lambda b: b.groupBy("a", "b").agg(
+            F.count("*").cast("long").alias("w")
+        ),
+        lambda acc, _prev, epoch_id: _checked_ranks(
+            "pagerank_weighted_maintain_stream",
+            epoch_id,
+            pagerank(_symmetrize_w(acc), iters=iters, weight_col="w"),
+            _nodes(acc),
+        ),
         order_cols=["a", "b"],
-        prefix="prwm_",
+        n_slices=n_slices,
+        merge=count_merge(["a", "b"], "w"),
     )
-    return state["result"]
 
 
 def personalized_pagerank_maintain_stream(
@@ -1181,51 +1119,26 @@ def personalized_pagerank_maintain_stream(
     seed-free. Final epoch (all pairs present, seed set intersects by
     the batch entry's construction) equals batch
     ``pagerank(seeds=...)``, sharing the personalized twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
 
-    state: dict = {"pairs": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        b = batch_df.localCheckpoint(eager=True)
-        acc = (
-            b
-            if state["pairs"] is None
-            else state["pairs"].unionByName(b).localCheckpoint(eager=True)
-        )
-        state["pairs"] = acc
-        nodes = (
-            acc.select(F.col("a").alias("node"))
-            .unionAll(acc.select(F.col("b").alias("node")))
-            .distinct()
-        )
-        n_seed = nodes.join(
-            seeds.select("node").distinct(), "node"
-        ).count()
-        if n_seed == 0:
-            state["result"] = nodes.filter(F.lit(False)).select(
+    def readout(acc: DataFrame, _prev, epoch_id: int) -> DataFrame:
+        nodes = _nodes(acc)
+        if nodes.join(seeds.select("node").distinct(), "node").count() == 0:
+            return nodes.filter(F.lit(False)).select(
                 "node", F.lit(0).cast("long").alias("rank_fp")
             )
-            return
-        pr = pagerank(_symmetrize(acc), iters=iters, seeds=seeds)
-        if pr.count() != nodes.count():
-            raise AssertionError(
-                f"personalized_pagerank_maintain_stream: epoch "
-                f"{epoch_id} rank table must stay total"
-            )
-        mass = pr.agg(F.sum("rank_fp")).collect()[0][0]
-        if mass > PR_SCALE:
-            raise AssertionError(
-                f"personalized_pagerank_maintain_stream: epoch "
-                f"{epoch_id} rank mass {mass} exceeds PR_SCALE"
-            )
-        state["result"] = pr
+        return _checked_ranks(
+            "personalized_pagerank_maintain_stream",
+            epoch_id,
+            pagerank(_symmetrize(acc), iters=iters, seeds=seeds),
+            nodes,
+        )
 
-    replay_fold(
+    return maintain(
         spark,
         pairs.select("a", "b"),
-        fold,
-        n_slices=n_slices,
+        lambda b: b,
+        readout,
         order_cols=["a", "b"],
-        prefix="pppm_",
+        n_slices=n_slices,
     )
-    return state["result"]

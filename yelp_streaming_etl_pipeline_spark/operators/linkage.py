@@ -219,12 +219,10 @@ def entity_maintain_stream(
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         b = batch_df.localCheckpoint(eager=True)
-        rows = (
-            b
-            if state["rows"] is None
-            else state["rows"].unionByName(b).localCheckpoint(eager=True)
+        # lazy unions of immutable per-epoch blocks (maintain's policy)
+        state["rows"] = (
+            b if state["rows"] is None else state["rows"].unionByName(b)
         )
-        state["rows"] = rows
         # dictionary delta: names never seen before (nid = min id in
         # this epoch == global min, by the ordered staging)
         batch_names = b.groupBy("name").agg(F.min("person_id").alias("nid"))
@@ -238,7 +236,7 @@ def entity_maintain_stream(
         acc_names = (
             fresh
             if state["names"] is None
-            else state["names"].unionByName(fresh).localCheckpoint(eager=True)
+            else state["names"].unionByName(fresh)
         )
         # incremental match: fresh x accumulated (which includes
         # fresh), blocked + levenshtein; old x old pairs are state
@@ -285,7 +283,6 @@ def entity_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=["person_id"],
-        prefix="people_",
     )
     clusters = dedup_clusters(state["pairs"], a_col="nid_a", b_col="nid_b")
     name_cluster = state["names"].join(

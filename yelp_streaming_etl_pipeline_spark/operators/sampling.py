@@ -306,47 +306,37 @@ def bottomk_sample_maintain_stream(
     batch sample over all data regardless of arrival order — the
     entry shares the batch oracle twin.
 
-    Per-epoch invariant asserted: state never exceeds k rows per
-    group."""
-    from ..streaming.replay import replay_fold
+    Per-epoch invariant asserted (inside the materializing job):
+    state never exceeds k rows per group."""
+    from ..streaming.replay import maintain
 
-    state: dict = {"best": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = bottomk_sample_by_group(batch_df, group, unit, k)
-        if state["best"] is None:
-            acc = fresh
-        else:
-            acc = bottomk_sample_by_group(
-                state["best"].unionByName(fresh),
-                F.col("g"),
-                F.col("unit"),
-                k,
+    def prune(rows: DataFrame, g: Column, u: Column) -> DataFrame:
+        # bottom-k, with the at-most-k invariant checked in the same
+        # job that materializes the block (no separate count job)
+        return (
+            bottomk_sample_by_group(rows, g, u, k)
+            .withColumn("_n", F.count("*").over(Window.partitionBy("g")))
+            .filter(
+                F.assert_true(
+                    F.col("_n") <= k,
+                    "bottomk_sample_maintain_stream: a group kept more "
+                    f"than {k} rows — prune failed",
+                ).isNull()
             )
-        acc = acc.localCheckpoint(eager=True)
-        over = (
-            acc.groupBy("g").agg(F.count("*").alias("n"))
-            .filter(F.col("n") > k)
-            .limit(1)
-            .count()
+            .drop("_n")
         )
-        if over:
-            raise AssertionError(
-                f"bottomk_sample_maintain_stream: epoch {epoch_id} left "
-                f"more than {k} rows in a group — prune failed"
-            )
-        state["best"] = acc
-        state["result"] = acc
 
-    replay_fold(
+    return maintain(
         spark,
         df,
-        fold,
-        n_slices=n_slices,
+        lambda b: prune(b, group, unit),
+        lambda acc, *_: acc,
         order_cols=order_cols,
-        prefix="bk_",
+        n_slices=n_slices,
+        merge=lambda acc, fresh: prune(
+            acc.unionByName(fresh), F.col("g"), F.col("unit")
+        ).localCheckpoint(eager=True),
     )
-    return state["result"]
 
 
 # ------------- stratified sampling under a TOTAL budget (batch+stream) ------
@@ -522,6 +512,5 @@ def stratified_budget_sample_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=order_cols,
-        prefix="sb_",
     )
     return state["result"]

@@ -1028,7 +1028,8 @@ def semantic_dedup_maintain_stream(
     than every fresh one — so a fresh vector's verdict depends only
     on (accumulated cluster residents) + (smaller-id vectors in its
     own batch), both available at its arrival epoch. Verdicts are
-    IMMUTABLE once emitted (asserted: the output is append-only).
+    IMMUTABLE once emitted (asserted: ids arrive strictly ascending,
+    so the output is append-only).
 
     Per-epoch cost: fresh x same-cluster residents — the identical
     blocked-quadratic bound as batch SemDeDup, paid incrementally;
@@ -1038,7 +1039,7 @@ def semantic_dedup_maintain_stream(
 
     Final (vec_id, centroid_id, kept) equals batch semantic_dedup
     over the full corpus, so the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import check_ordered_arrival, replay_fold
 
     cent = embeddings.filter(
         F.col(id_col) % centroid_mod == 0
@@ -1047,7 +1048,7 @@ def semantic_dedup_maintain_stream(
         F.col(vec_col).alias("cent_vec"),
     ).localCheckpoint(eager=True)
 
-    state: dict = {"residents": None, "out": None}
+    state: dict = {"residents": None, "out": None, "max_vid": None}
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         fresh = _semdedup_assign(
@@ -1056,6 +1057,11 @@ def semantic_dedup_maintain_stream(
             ),
             cent,
         ).localCheckpoint(eager=True)
+        # every fresh vid must exceed every resident's: the premise of
+        # deciding fresh vectors against residents only
+        state["max_vid"] = check_ordered_arrival(
+            fresh, "vid", state["max_vid"], epoch_id
+        )
         b_new = fresh.alias("b")
 
         def pair_cols(left: DataFrame) -> DataFrame:
@@ -1092,27 +1098,12 @@ def semantic_dedup_maintain_stream(
             )
             .localCheckpoint(eager=True)
         )
-        if state["out"] is None:
-            state["out"] = verdicts
-        else:
-            # append-only contract: an epoch may never re-emit (and
-            # thus never flip) an already-decided vid
-            n_overlap = state["out"].select("vid").join(
-                verdicts.select("vid"), "vid"
-            ).count()
-            if n_overlap:
-                raise AssertionError(
-                    f"semantic_dedup_maintain_stream: epoch {epoch_id} "
-                    f"re-emitted {n_overlap} already-decided vector(s) — "
-                    "verdicts must be immutable"
-                )
-            state["out"] = state["out"].unionByName(verdicts)
-        state["residents"] = (
-            fresh
-            if state["residents"] is None
-            else state["residents"].unionByName(fresh)
-            .localCheckpoint(eager=True)
-        )
+        # lazy unions of immutable per-epoch blocks (maintain's policy)
+        out, residents = verdicts, fresh
+        if state["out"] is not None:
+            out = state["out"].unionByName(verdicts)
+            residents = state["residents"].unionByName(fresh)
+        state["out"], state["residents"] = out, residents
 
     replay_fold(
         spark,
@@ -1120,7 +1111,6 @@ def semantic_dedup_maintain_stream(
         fold,
         n_slices=n_slices,
         order_cols=[id_col],
-        prefix="semdedup_",
     )
     return state["out"].select(
         F.col("vid").alias("vec_id"), "centroid_id", "kept"
@@ -1170,6 +1160,23 @@ def _ddot(a: Column, b: Column, dim: int | None = None) -> Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _assert_pq_width(
+    df: DataFrame, vec_col: str, dim: int, entry: str
+) -> DataFrame:
+    """``df`` with every ``vec_col`` asserted to hold exactly ``dim``
+    (= n_sub * sub) elements: the unrolled sub-vector folds would read
+    past a short vector's end. A filter that keeps every row, so the
+    check runs inside the existing scan (no extra job); a NULL vector
+    fails it too."""
+    return df.filter(
+        F.assert_true(
+            F.size(vec_col) == dim,
+            f"{entry}: every {vec_col} must hold exactly n_sub * sub = "
+            f"{dim} elements",
+        ).isNull()
     )
 
 
@@ -1281,10 +1288,11 @@ def ivfpq_topk(
     n_centroids of it."""
     # 1. coarse assign + residuals (argmax cosine over broadcast
     # centroids via partial-agg max_by; shared with
-    # pq_kmeans_codebooks). dim = n_sub * sub by construction
-    # (_subspaces slices the full vector into n_sub sub-wide pieces),
-    # so every vector fold below unrolls into codegen'd arithmetic.
-    dim = n_sub * sub
+    # pq_kmeans_codebooks). Full-width folds stay higher-order-function
+    # folds; only the sub-wide folds over _subspaces' slices unroll,
+    # which is why every vector must hold exactly n_sub * sub elements.
+    corpus = _assert_pq_width(corpus, vec_col, n_sub * sub, "ivfpq_topk")
+    queries = _assert_pq_width(queries, vec_col, n_sub * sub, "ivfpq_topk")
     cent, assigned = _coarse_residuals(
         corpus, centroid_mod, id_col, vec_col
     )
@@ -1458,6 +1466,9 @@ def pq_kmeans_codebooks(
             "pq_kmeans_codebooks: iters must be >= 1 (n_members comes "
             "from the assignment that produced the final centroids)"
         )
+    corpus = _assert_pq_width(
+        corpus, vec_col, n_sub * sub, "pq_kmeans_codebooks"
+    )
     _, assigned = _coarse_residuals(
         corpus, centroid_mod, id_col, vec_col
     )

@@ -586,43 +586,17 @@ def bm25_maintain_stream(
 
     Final epoch equals batch bm25_topk over all docs, so the entry
     shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
 
-    state: dict = {"postings": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = _bm25_postings(batch_df, text_col, id_col).localCheckpoint(
-            eager=True
-        )
-        if state["postings"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["postings"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"bm25_maintain_stream: epoch {epoch_id} re-tokenized "
-                    f"{n_overlap} already-indexed doc(s) — postings state "
-                    "must be append-only per doc"
-                )
-            acc = state["postings"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["postings"] = acc
-        state["result"] = _bm25_from_postings(acc, n_query_terms, k)
-
-    replay_fold(
+    return maintain(
         spark,
         df.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _bm25_postings(b, text_col, id_col),
+        lambda acc, *_: _bm25_from_postings(acc, n_query_terms, k),
         order_cols=[id_col],
-        prefix="bm25m_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]
 
 
 def bm25_maintain_stream_bpe(
@@ -660,7 +634,7 @@ def bm25_maintain_stream_bpe(
     immutable checkpointed blocks; readout is the shared
     integer-exact _bm25_from_postings (broadcast query terms,
     TakeOrderedAndProject top-k)."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
     from .tokenizer import bpe_learn, export_bpe
 
     merges, vocab = bpe_learn(df, text_col, n_merges, "char")
@@ -669,41 +643,15 @@ def bm25_maintain_stream_bpe(
         vocab = spark.read.parquet(vocab_path)
     # the fixed artifact: materialize once, reuse every epoch
     vocab = vocab.localCheckpoint(eager=True)
-    state: dict = {"postings": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = _bpe_piece_postings(
-            batch_df, vocab, text_col, id_col
-        ).localCheckpoint(eager=True)
-        if state["postings"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["postings"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"bm25_maintain_stream_bpe: epoch {epoch_id} "
-                    f"re-tokenized {n_overlap} already-indexed doc(s) — "
-                    "postings state must be append-only per doc"
-                )
-            acc = state["postings"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["postings"] = acc
-        state["result"] = _bm25_from_postings(acc, n_query_terms, k)
-
-    replay_fold(
+    return maintain(
         spark,
         df.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _bpe_piece_postings(b, vocab, text_col, id_col),
+        lambda acc, *_: _bm25_from_postings(acc, n_query_terms, k),
         order_cols=[id_col],
-        prefix="bm25mb_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]
 
 
 def bm25_cross_maintain_stream_bpe(
@@ -734,7 +682,7 @@ def bm25_cross_maintain_stream_bpe(
     bounded per-epoch-recompute discipline as the self-corpus form.
     Final epoch equals batch bm25_cross_topk_bpe (same corpus trains
     the vocab), so the entry shares its oracle twin."""
-    from ..streaming.replay import replay_fold
+    from ..streaming.replay import maintain
     from .tokenizer import bpe_learn, export_bpe
 
     merges, vocab = bpe_learn(docs, text_col, n_merges, "char")
@@ -745,40 +693,14 @@ def bm25_cross_maintain_stream_bpe(
     target_postings = _bpe_piece_postings(
         target, vocab, text_col, id_col
     ).localCheckpoint(eager=True)
-    state: dict = {"postings": None, "result": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fresh = _bpe_piece_postings(
-            batch_df, vocab, text_col, id_col
-        ).localCheckpoint(eager=True)
-        if state["postings"] is None:
-            acc = fresh
-        else:
-            n_overlap = (
-                state["postings"].select("doc_id").distinct()
-                .join(fresh.select("doc_id").distinct(), "doc_id")
-                .count()
-            )
-            if n_overlap:
-                raise AssertionError(
-                    f"bm25_cross_maintain_stream_bpe: epoch {epoch_id} "
-                    f"re-tokenized {n_overlap} already-indexed doc(s) — "
-                    "postings state must be append-only per doc"
-                )
-            acc = state["postings"].unionByName(fresh).localCheckpoint(
-                eager=True
-            )
-        state["postings"] = acc
-        state["result"] = _bm25_from_postings(
-            acc, n_query_terms, k, query_postings=target_postings
-        )
-
-    replay_fold(
+    return maintain(
         spark,
         docs.select(F.col(id_col), F.col(text_col)),
-        fold,
-        n_slices=n_slices,
+        lambda b: _bpe_piece_postings(b, vocab, text_col, id_col),
+        lambda acc, *_: _bm25_from_postings(
+            acc, n_query_terms, k, query_postings=target_postings
+        ),
         order_cols=[id_col],
-        prefix="bm25xb_",
+        n_slices=n_slices,
+        key="doc_id",
     )
-    return state["result"]

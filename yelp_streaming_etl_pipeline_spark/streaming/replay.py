@@ -1,33 +1,55 @@
-"""Staged micro-batch replay: the shared harness behind every
-*_maintenance_stream entry (graph k-core/LPA, entity resolution,
-near-dup maintenance).
+"""Staged micro-batch replay and the ``maintain`` combinator behind
+the *_maintain_stream entries (BM25/CDC/exact-substring/DSIR/SimHash
+state, graph k-core/LPA/PageRank, bigram-LM counts, bottom-k samples).
 
-A batch DataFrame is staged as ``n_slices`` mtime-ordered parquet
-files and re-read through the file stream source under
+Replay: a batch DataFrame is staged as ``n_slices`` mtime-ordered
+parquet files and re-read through the file stream source under
 ``maxFilesPerTrigger=1``, so ``foreachBatch`` sees exactly
 ``n_slices`` deterministic micro-batches — the test-staging stand-in
 for a Kafka topic (streaming/filetopic.py is the keyed-topic
 equivalent; this one is for INSERT-ONLY maintenance folds where only
-arrival order matters).
+arrival order matters). Slicing is ntile over ``order_cols``, so
+every engine and every run stages identical batches, and a fold
+keyed on "first occurrence wins" sees first occurrences in global
+order — state is never re-keyed retroactively by a later batch.
 
-Determinism contract: slicing is ntile over ``order_cols``, so every
-engine and every run stages identical batches, and a fold keyed on
-"first occurrence wins" (e.g. a name's minimum-id representative)
-sees first occurrences in global order — state is never re-keyed
-retroactively by a later batch.
+``maintain`` is the one fold skeleton every maintenance entry with a
+single state table shares. Per epoch:
+
+1. ``arrive(batch)`` turns the raw batch into the fresh state block
+   (the expensive per-document work — tokenize, hash, chunk — runs
+   here, exactly once per document) and the block is materialized
+   with an eager localCheckpoint;
+2. with a ``key``, the append-only precondition is checked on that
+   block: its smallest key must exceed the largest key of every
+   earlier epoch (check_ordered_arrival — one 1-row aggregate, no
+   join against state);
+3. the block joins the state: by default state is a LAZY union of
+   the immutable per-epoch blocks, so no epoch rewrites O(state);
+   with ``merge``, ``merge(state, fresh)`` returns the next
+   materialized state (count tables that sum per key, samples that
+   prune back to k);
+4. ``readout(state, prev_result, epoch_id)`` derives the epoch's
+   result (it may assert per-epoch invariants against the previous
+   result); the final epoch's result is returned.
+
+Entries whose state is several tables, or whose fold reads state
+before it can build the fresh block (keep-first anti-joins, fresh x
+accumulated candidate joins), call ``replay_fold`` directly.
 
 Scale note: the single-partition ntile window is staging scaffolding
 only (test corpora); production replays arrive pre-batched from the
-source. The FOLD side — what each entry actually demonstrates — is
-the part with a 100 TB story: per-epoch work bounded by the batch
-delta, accumulated state localCheckpointed per epoch (a compacted
-keyed state table in production).
+source. The fold side is the part with a 100 TB story: per-epoch
+work bounded by the batch delta plus the readout, state held as
+immutable checkpointed blocks (a compacted keyed state table in
+production).
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
 import tempfile
 from typing import Callable, Sequence
 
@@ -36,17 +58,15 @@ from pyspark.sql import functions as F
 
 
 def stage_ordered_slices(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    n_slices: int = 3,
-    prefix: str = "slices_",
+    df: DataFrame, order_cols: Sequence[str], n_slices: int = 3
 ) -> str:
     """Write ``df`` as ``n_slices`` parquet files with strictly
     increasing mtimes, sliced by ntile over ``order_cols`` ASCENDING.
     Returns the directory path for ``spark.readStream``."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    w = Window.orderBy(*order_cols)
-    sliced = df.withColumn("_slice", F.ntile(n_slices).over(w))
+    d = tempfile.mkdtemp(prefix="slices_")
+    sliced = df.withColumn(
+        "_slice", F.ntile(n_slices).over(Window.orderBy(*order_cols))
+    )
     timed: set[str] = set()
     for i in range(1, n_slices + 1):
         sliced.filter(F.col("_slice") == i).drop("_slice").coalesce(
@@ -65,35 +85,121 @@ def replay_fold(
     fold: Callable[[DataFrame, int], None],
     n_slices: int = 3,
     order_cols: Sequence[str] | None = None,
-    prefix: str = "replay_",
 ) -> int:
     """Stage ``df`` as ordered slices, replay them as micro-batches,
     and call ``fold(batch_df, epoch_id)`` per epoch (the fold closure
     owns its accumulated state). Asserts at least ``n_slices`` epochs
-    ran; returns the epoch count."""
-    cols = list(order_cols) if order_cols else df.columns
-    d = stage_ordered_slices(df, cols, n_slices, prefix=prefix)
+    ran; returns the epoch count.
+
+    The streaming checkpoint dir is removed once the query has
+    terminated; the staged slices stay, because fold state may still
+    read them lazily."""
+    d = stage_ordered_slices(df, list(order_cols or df.columns), n_slices)
     epochs = {"n": 0}
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         fold(batch_df, epoch_id)
         epochs["n"] += 1
 
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{prefix}")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_replay_")
+    q = None
+    try:
+        q = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d)
+            .writeStream.foreachBatch(_fold)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        q.awaitTermination()
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     assert epochs["n"] >= n_slices, (
         f"expected >= {n_slices} micro-batches, got {epochs['n']}"
     )
     return epochs["n"]
+
+
+def check_ordered_arrival(
+    block: DataFrame, key: str, prev_max, epoch_id: int
+):
+    """Raise unless every ``key`` in ``block`` exceeds ``prev_max``,
+    the largest key of every earlier epoch; return the new running
+    max. One 1-row min/max aggregate (coalesced, so one job). Ordered
+    arrival implies disjoint keys, so this is the append-only check
+    for per-key state, and the precondition of keep-first folds."""
+    lo, hi = (
+        block.coalesce(1).agg(F.min(key), F.max(key)).collect()[0]
+    )
+    if lo is not None and prev_max is not None and lo <= prev_max:
+        raise AssertionError(
+            f"epoch {epoch_id}: {key} {lo} arrived after {prev_max} — "
+            "append-only state needs strictly ordered arrival"
+        )
+    return prev_max if hi is None else hi
+
+
+def count_merge(keys: Sequence[str], w: str):
+    """``merge`` for count-table state: union + per-key sum of ``w``,
+    materialized, asserting mass conservation — sum(state) +
+    sum(fresh) == sum(merged), in one 1-row job."""
+
+    def merge(state: DataFrame, fresh: DataFrame) -> DataFrame:
+        merged = (
+            state.unionByName(fresh)
+            .groupBy(*keys)
+            .agg(F.sum(w).cast("long").alias(w))
+            .localCheckpoint(eager=True)
+        )
+        lost = (
+            state.select(w)
+            .unionByName(fresh.select(w))
+            .unionByName(merged.select((-F.col(w)).alias(w)))
+            .coalesce(1)
+            .agg(F.sum(w))
+            .collect()[0][0]
+        )
+        if lost:  # None only when every table is empty
+            raise AssertionError(
+                f"count merge lost {lost} of {w} mass — the merge must "
+                "conserve counts"
+            )
+        return merged
+
+    return merge
+
+
+def maintain(
+    spark,
+    src: DataFrame,
+    arrive: Callable[[DataFrame], DataFrame],
+    readout: Callable[[DataFrame, object, int], object],
+    *,
+    order_cols: Sequence[str] | None,
+    n_slices: int = 3,
+    key: str | None = None,
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+):
+    """Replay ``src`` and fold each epoch's ``arrive(batch)`` block
+    into one state table (see the module docstring for the four
+    steps); return the final epoch's ``readout``."""
+    st: dict = {"state": None, "result": None, "max": None}
+
+    def fold(batch: DataFrame, epoch_id: int) -> None:
+        fresh = arrive(batch).localCheckpoint(eager=True)
+        if key is not None:
+            st["max"] = check_ordered_arrival(fresh, key, st["max"], epoch_id)
+        if st["state"] is None:
+            st["state"] = fresh
+        elif merge is None:
+            st["state"] = st["state"].unionByName(fresh)
+        else:
+            st["state"] = merge(st["state"], fresh)
+        st["result"] = readout(st["state"], st["result"], epoch_id)
+
+    replay_fold(spark, src, fold, n_slices=n_slices, order_cols=order_cols)
+    return st["result"]
