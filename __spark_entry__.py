@@ -42,12 +42,21 @@ from yelp_streaming_etl_pipeline_spark.operators import similarity as SIM
 from yelp_streaming_etl_pipeline_spark.operators import sketches as SK
 from yelp_streaming_etl_pipeline_spark.operators import stats as ST
 from yelp_streaming_etl_pipeline_spark.operators import text_analysis as TA
-from yelp_streaming_etl_pipeline_spark.sources.events import read_events
+from yelp_streaming_etl_pipeline_spark.sources.events import (
+    convert_event_ts,
+    read_events,
+    read_events_stream,
+)
 from yelp_streaming_etl_pipeline_spark.sources.reviews import (
     NOW_LITERAL,
     synthetic_reviews,
 )
 from yelp_streaming_etl_pipeline_spark.sources.tables import read_fixture
+from yelp_streaming_etl_pipeline_spark.streaming import joins as SJ
+from yelp_streaming_etl_pipeline_spark.streaming.replay import (
+    drain,
+    stage_ordered_slices,
+)
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -171,21 +180,12 @@ def q_review_stats_overall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ST.full_review_stats(_staged(spark, sf_dir), by_business=False)
 
 
-def q_attributed_purchases_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join (attribution) run to completion with
-    trigger(availableNow). The events fixture is ONE file -> one
-    micro-batch, and inner-join matches emit within the batch they
-    arrive in, so the emitted set is deterministic: every (purchase,
-    prior click within 30 min) pair — fully oracle-checkable."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-    from yelp_streaming_etl_pipeline_spark.streaming.joins import (
-        attribute_purchases,
-    )
+def _attribution_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The stream-join entries' two sides, each its own read of the
+    events fixture stream: clicks (user_id, click_ts, click_id) and
+    purchases (user_id, purchase_ts, purchase_id, amount)."""
 
     def side(event_type: str, cols: dict[str, str]) -> DataFrame:
         ev = read_events_stream(_ensure_conf(spark), sf_dir)
@@ -198,18 +198,16 @@ def q_attributed_purchases_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         "purchase",
         {"ts": "purchase_ts", "event_id": "purchase_id", "value": "amount"},
     )
-    name = "attributed_" + uuid.uuid4().hex[:8]
-    q = (
-        attribute_purchases(clicks, purchases)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_attr_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return clicks, purchases
+
+
+def q_attributed_purchases_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join (attribution) run to completion with
+    trigger(availableNow). The events fixture is ONE file -> one
+    micro-batch, and inner-join matches emit within the batch they
+    arrive in, so the emitted set is deterministic: every (purchase,
+    prior click within 30 min) pair — fully oracle-checkable."""
+    return drain(SJ.attribute_purchases(*_attribution_sides(spark, sf_dir)))
 
 
 def q_attributed_purchases_semi_stream(
@@ -221,41 +219,9 @@ def q_attributed_purchases_semi_stream(
     (inner, left outer, full outer, semi). One-file replay -> matches
     emit in-batch; the oracle is the EXISTS form of the interval
     join."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
+    return drain(
+        SJ.attribute_purchases_semi(*_attribution_sides(spark, sf_dir))
     )
-    from yelp_streaming_etl_pipeline_spark.streaming.joins import (
-        attribute_purchases_semi,
-    )
-
-    def side(event_type: str, cols: dict[str, str]) -> DataFrame:
-        ev = read_events_stream(_ensure_conf(spark), sf_dir)
-        return ev.filter(F.col("event_type") == event_type).select(
-            "user_id", *[F.col(src).alias(dst) for src, dst in cols.items()]
-        )
-
-    clicks = side("click", {"ts": "click_ts", "event_id": "click_id"})
-    purchases = side(
-        "purchase",
-        {"ts": "purchase_ts", "event_id": "purchase_id", "value": "amount"},
-    )
-    name = "attributed_semi_" + uuid.uuid4().hex[:8]
-    q = (
-        attribute_purchases_semi(clicks, purchases)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_attrs_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def q_topic_roundtrip_reviews(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,9 +231,11 @@ def q_topic_roundtrip_reviews(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink sends, topology.kafka_payload) and consumed back through the
     shared Kafka decode (filetopic.decode_review_records). The oracle
     is the source-table derivation itself: a lossless broker round
-    trip returns exactly the input rows."""
+    trip returns exactly the input rows. The source, topic and
+    producer checkpoint share one temp dir, removed once the consumer
+    has drained the topic into memory."""
+    import shutil
     import tempfile
-    import uuid
 
     from yelp_streaming_etl_pipeline_spark.streaming import filetopic as FT
 
@@ -275,35 +243,23 @@ def q_topic_roundtrip_reviews(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = synthetic_reviews(spark, sf_dir).drop(
         "language", "language_confidence"
     )
-    src = tempfile.mkdtemp(prefix="topic_src_")
-    corpus.coalesce(1).write.mode("overwrite").parquet(src)
-    topic_dir = tempfile.mkdtemp(prefix="topic_")
-
-    prod = (
+    root = tempfile.mkdtemp(prefix="topic_roundtrip_")
+    try:
+        corpus.coalesce(1).write.mode("overwrite").parquet(f"{root}/src")
         FT.write_file_topic_keyed(
-            spark.readStream.schema(corpus.schema).parquet(src),
-            topic_dir,
-            tempfile.mkdtemp(prefix="ckpt_prod_"),
+            spark.readStream.schema(corpus.schema).parquet(f"{root}/src"),
+            f"{root}/topic",
+            f"{root}/ckpt_prod",
             key_col="business_id",
             timestamp_col="ingestion_timestamp",
+        ).trigger(availableNow=True).start().awaitTermination()
+        return drain(
+            FT.decode_review_records(
+                FT.read_file_topic_stream(spark, f"{root}/topic")
+            )
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    prod.awaitTermination()
-
-    name = "topic_roundtrip_" + uuid.uuid4().hex[:8]
-    cons = (
-        FT.decode_review_records(FT.read_file_topic_stream(spark, topic_dir))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_cons_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    cons.awaitTermination()
-    return spark.table(name)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # ------------- training-corpus assembly (SURVEY.md §7 extension) -----------
@@ -1182,41 +1138,9 @@ def q_attributed_purchases_outer_stream(
     (min over both inputs of ms-floored max event time, minus 1 h).
     Purchases younger than the watermark stay in state unemitted —
     correct streaming semantics, mirrored exactly by the oracle."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
+    return drain(
+        SJ.attribute_purchases_outer(*_attribution_sides(spark, sf_dir))
     )
-    from yelp_streaming_etl_pipeline_spark.streaming.joins import (
-        attribute_purchases_outer,
-    )
-
-    def side(event_type: str, cols: dict[str, str]) -> DataFrame:
-        ev = read_events_stream(_ensure_conf(spark), sf_dir)
-        return ev.filter(F.col("event_type") == event_type).select(
-            "user_id", *[F.col(src).alias(dst) for src, dst in cols.items()]
-        )
-
-    clicks = side("click", {"ts": "click_ts", "event_id": "click_id"})
-    purchases = side(
-        "purchase",
-        {"ts": "purchase_ts", "event_id": "purchase_id", "value": "amount"},
-    )
-    name = "attributed_outer_" + uuid.uuid4().hex[:8]
-    q = (
-        attribute_purchases_outer(clicks, purchases)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_attro_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def q_attributed_purchases_full_outer_stream(
@@ -1229,41 +1153,9 @@ def q_attributed_purchases_full_outer_stream(
     window), the bound at which no future purchase can attribute to
     them. Both eviction bounds empirically verified against Spark's
     derived state watermarks and mirrored in the oracle."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
+    return drain(
+        SJ.attribute_purchases_full_outer(*_attribution_sides(spark, sf_dir))
     )
-    from yelp_streaming_etl_pipeline_spark.streaming.joins import (
-        attribute_purchases_full_outer,
-    )
-
-    def side(event_type: str, cols: dict[str, str]) -> DataFrame:
-        ev = read_events_stream(_ensure_conf(spark), sf_dir)
-        return ev.filter(F.col("event_type") == event_type).select(
-            "user_id", *[F.col(src).alias(dst) for src, dst in cols.items()]
-        )
-
-    clicks = side("click", {"ts": "click_ts", "event_id": "click_id"})
-    purchases = side(
-        "purchase",
-        {"ts": "purchase_ts", "event_id": "purchase_id", "value": "amount"},
-    )
-    name = "attributed_fo_" + uuid.uuid4().hex[:8]
-    q = (
-        attribute_purchases_full_outer(clicks, purchases)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_attrfo_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1274,28 +1166,14 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic: every session closed by a later in-batch event —
     i.e. all sessions except each user's final (still-open) one. That
     makes this streaming operator fully oracle-checkable."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
     from yelp_streaming_etl_pipeline_spark.streaming.stateful import (
         sessionize_stream,
     )
 
-    name = "closed_sessions_" + uuid.uuid4().hex[:8]
-    q = (
+    closed = drain(
         sessionize_stream(read_events_stream(_ensure_conf(spark), sf_dir))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sess_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return closed.select(
         "user_id",
         "session_start",
         "session_end",
@@ -1337,33 +1215,26 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     single micro-batch — the state function sorts each key's rows by
     (source, ingestion_timestamp), so every row's first/duplicate tag
     is deterministic and matches the batch oracle's ranking."""
+    import shutil
     import tempfile
-    import uuid
 
     from yelp_streaming_etl_pipeline_spark.streaming.stateful import (
         dedup_reviews_stream,
     )
 
-    corpus = _dup_review_corpus(spark, sf_dir)
     d = tempfile.mkdtemp(prefix="dup_corpus_")
-    corpus.coalesce(1).write.mode("overwrite").parquet(d)
-    stream = spark.readStream.schema(
-        spark.read.parquet(d).schema
-    ).parquet(d)
-    name = "dedup_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        dedup_reviews_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dd_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
-        "review_id", "date", "business_id", "source", "is_duplicate"
-    )
+    try:
+        _dup_review_corpus(spark, sf_dir).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(d)
+        stream = spark.readStream.schema(
+            spark.read.parquet(d).schema
+        ).parquet(d)
+        return drain(dedup_reviews_stream(stream)).select(
+            "review_id", "date", "business_id", "source", "is_duplicate"
+        )
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1382,14 +1253,7 @@ def q_windowed_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows finalized by the watermark are emitted. One-file fixture
     -> one data batch, so the emitted set is deterministic: windows
     whose end (ms) <= final watermark (max event time ms - 1 h)."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-
-    agg = (
+    return drain(
         read_events_stream(_ensure_conf(spark), sf_dir)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"))
@@ -1404,17 +1268,32 @@ def q_windowed_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = "hourly_windows_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_win_"))
-        .trigger(availableNow=True)
-        .start()
+
+
+def _sliding_type_counts(ev: DataFrame, delay: str) -> DataFrame:
+    """Per-event-type counts over sliding 2-h windows advancing
+    hourly, watermarked ``delay`` behind the stream's event time."""
+    return (
+        ev.withWatermark("ts", delay)
+        .groupBy(F.window("ts", "2 hours", "1 hour"), "event_type")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            F.col("window.start").alias("window_start"),
+            F.col("window.end").alias("window_end"),
+            "event_type",
+            "n_events",
+        )
     )
-    q.awaitTermination()
-    return spark.table(name)
+
+
+def _top3_per_window(counts: DataFrame) -> DataFrame:
+    """The top-3 event types per window, ties broken by type name."""
+    w = Window.partitionBy("window_start").orderBy(
+        F.desc("n_events"), F.asc("event_type")
+    )
+    return counts.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= 3
+    )
 
 
 def q_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1430,43 +1309,8 @@ def q_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation per micro-batch and state bounded by the
     watermark horizon; the rank runs over one row per (window, type)
     — already tiny."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-
-    agg = (
-        read_events_stream(_ensure_conf(spark), sf_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "2 hours", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )
-    name = "trending_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_trend_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("window_start").orderBy(
-        F.desc("n_events"), F.asc("event_type")
-    )
-    return (
-        spark.table(name)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-    )
+    ev = read_events_stream(_ensure_conf(spark), sf_dir)
+    return _top3_per_window(drain(_sliding_type_counts(ev, "1 hour")))
 
 
 def q_enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1480,13 +1324,6 @@ def q_enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The tier dim derives deterministically from the fixture's user
     ids so the oracle can rebuild it (a real deployment swaps in a
     JDBC/parquet dim table without changing the plan)."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events, read_events_stream,
-    )
-
     tiers = (
         read_events(_ensure_conf(spark), sf_dir)
         .select("user_id")
@@ -1499,7 +1336,7 @@ def q_enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    enriched = (
+    return drain(
         read_events_stream(_ensure_conf(spark), sf_dir)
         .withWatermark("ts", "1 hour")
         .join(F.broadcast(tiers), "user_id")
@@ -1515,17 +1352,6 @@ def q_enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = "enriched_" + uuid.uuid4().hex[:8]
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_enr_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1910,28 +1736,8 @@ def q_hll_registers_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative/commutative, so the streaming state IS the sketch and
     the final table equals the batch build bit-for-bit (same oracle
     as hll_registers). State is bounded at 256 rows forever."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-
     ev = read_events_stream(_ensure_conf(spark), sf_dir)
-    regs = SK.hll_registers(ev, F.col("event_id"))
-    name = "hll_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        regs.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_hlls_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(SK.hll_registers(ev, F.col("event_id")), "complete")
 
 
 def q_fingerprint_incremental(
@@ -2175,12 +1981,12 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     where pre-bucketing amortizes one shuffle across every future
     join on the key. Result is the plain join aggregate the oracle
     runs."""
+    import os
     import tempfile
-    import uuid
 
-    tag = uuid.uuid4().hex[:8]
-    od_t, cu_t = f"orders_b_{tag}", f"customer_b_{tag}"
     d = tempfile.mkdtemp(prefix="bucketed_")
+    tag = os.path.basename(d)  # unique per call, a valid identifier
+    od_t, cu_t = f"orders_b_{tag}", f"customer_b_{tag}"
     (
         _t(spark, sf_dir, "orders")
         .write.mode("overwrite")
@@ -2364,25 +2170,10 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap sessionization via Spark's NATIVE session_window aggregate
-    (dynamic merging session windows in the state store) — the
-    built-in complement of the applyInPandasWithState sessionizer in
-    q_sessionize_stream. Append mode emits a session once the
-    watermark passes its end; session_window's end is last event +
-    gap, and windows merge while the next event starts at or before
-    the current end (touching windows merge) — both mirrored exactly
-    in the oracle (new session iff the inter-event gap is strictly
-    > 30 min, emission iff end-in-ms < final watermark)."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-
-    ev = read_events_stream(_ensure_conf(spark), sf_dir)
-    sess = (
+def _native_sessions(ev: DataFrame) -> DataFrame:
+    """Per-user gap sessions (30 min) by the native session_window
+    aggregate under a 10-min watermark."""
+    return (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(
             F.session_window("ts", "30 minutes").alias("sw"), "user_id"
@@ -2399,19 +2190,21 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value",
         )
     )
-    name = "native_sessions_" + uuid.uuid4().hex[:8]
-    q = (
-        sess.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_nsw_")
-        )
-        .trigger(availableNow=True)
-        .start()
+
+
+def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap sessionization via Spark's NATIVE session_window aggregate
+    (dynamic merging session windows in the state store) — the
+    built-in complement of the applyInPandasWithState sessionizer in
+    q_sessionize_stream. Append mode emits a session once the
+    watermark passes its end; session_window's end is last event +
+    gap, and windows merge while the next event starts at or before
+    the current end (touching windows merge) — both mirrored exactly
+    in the oracle (new session iff the inter-event gap is strictly
+    > 30 min, emission iff end-in-ms < final watermark)."""
+    return drain(
+        _native_sessions(read_events_stream(_ensure_conf(spark), sf_dir))
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def q_cms_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2423,28 +2216,10 @@ def q_cms_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the candidate list (here the distinct user ids, batch-read —
     the external-candidate point-query shape). Trending-terms at
     production: same plan, term = token or entity."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-
     ev = read_events_stream(_ensure_conf(spark), sf_dir)
-    regs = SK.cms_counters(ev, F.col("user_id").cast("string"))
-    name = "cms_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        regs.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_cmss_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    counters = drain(
+        SK.cms_counters(ev, F.col("user_id").cast("string")), "complete"
     )
-    q.awaitTermination()
-    counters = spark.table(name)
     terms = (
         read_events(_ensure_conf(spark), sf_dir)
         .select(F.col("user_id").cast("string").alias("term"))
@@ -2685,28 +2460,8 @@ def q_quantile_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative/commutative, so the streaming state IS the sketch
     (bounded at ~64 x 64 rows forever) and the final table equals the
     batch build bit-for-bit (same oracle as quantile_sketch)."""
-    import tempfile
-    import uuid
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-
     ev = read_events_stream(_ensure_conf(spark), sf_dir)
-    regs = SK.quantile_sketch_registers(ev, F.col("value"))
-    name = "qsk_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        regs.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_qsks_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(SK.quantile_sketch_registers(ev, F.col("value")), "complete")
 
 
 def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2769,15 +2524,9 @@ def q_events_hourly_update_stream(
     every micro-batch emits the windows it changed; the sink upserts,
     so the latest row per window IS the table. Run to completion under
     availableNow the upserted table equals the batch aggregate (the
-    events_hourly oracle verbatim). foreachBatch stamps each epoch and
-    the upsert is the latest-epoch row per window — distributed, no
-    driver collect, correct at any micro-batch split."""
-    import tempfile
-
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        read_events_stream,
-    )
-
+    events_hourly oracle verbatim). drain's update sink stamps each
+    epoch and the upsert is the latest-epoch row per window —
+    distributed, no driver collect, correct at any micro-batch split."""
     from yelp_streaming_etl_pipeline_spark.functions.rounding import (
         exact_avg,
     )
@@ -2798,30 +2547,7 @@ def q_events_hourly_update_stream(
             "avg_value",
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="upd_sink_")
-
-    def upsert_epoch(df: DataFrame, epoch: int) -> None:
-        df.withColumn("_epoch", F.lit(epoch)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert_epoch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upd_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
-    w = Window.partitionBy("window_start").orderBy(F.desc("_epoch"))
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("window_start", "total", "total_value", "avg_value")
-    )
+    return drain(agg, "update", key="window_start")
 
 
 def q_user_value_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2832,6 +2558,7 @@ def q_user_value_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-key-ordered delivery a keyed Kafka topic provides) and
     consumed one file per micro-batch, so the stream fold reproduces
     the batch fold bit-for-bit and shares user_value_ewma's oracle."""
+    import shutil
     import tempfile
 
     from yelp_streaming_etl_pipeline_spark.streaming.stateful import (
@@ -2843,38 +2570,18 @@ def q_user_value_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "value"
     )
     stage_dir = tempfile.mkdtemp(prefix="ewma_src_")
-    ev.repartition(4, "user_id").write.mode("overwrite").parquet(stage_dir)
-    schema = spark.read.parquet(stage_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
-    out_dir = tempfile.mkdtemp(prefix="ewma_sink_")
-
-    def upsert_epoch(df: DataFrame, epoch: int) -> None:
-        df.withColumn("_epoch", F.lit(epoch)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    q = (
-        ewma_stream(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(upsert_epoch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ewma_")
+    try:
+        ev.repartition(4, "user_id").write.mode("overwrite").parquet(
+            stage_dir
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
-    w = Window.partitionBy("key").orderBy(F.desc("_epoch"))
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("key", "n_events", "ewma")
-    )
+        stream = (
+            spark.readStream.schema(spark.read.parquet(stage_dir).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage_dir)
+        )
+        return drain(ewma_stream(stream), "update", key="key")
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 def q_quantile_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3683,6 +3390,16 @@ def q_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.winnow_neardup_pairs(_t_cpu(spark, sf_dir, "documents"))
 
 
+def _watermark_dedup(stream: DataFrame, delay: str) -> DataFrame:
+    """Native dropDuplicatesWithinWatermark on (review_id, date),
+    projected to columns every replica of a review shares."""
+    return (
+        stream.withWatermark("date", delay)
+        .dropDuplicatesWithinWatermark(["review_id", "date"])
+        .select("review_id", "date", "business_id", "user_id", "rating")
+    )
+
+
 def q_dedup_watermark_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3694,33 +3411,20 @@ def q_dedup_watermark_stream(
     fields, so whichever physical replica survives inside the batch,
     the emitted row is value-identical and matches the batch DISTINCT
     oracle."""
+    import shutil
     import tempfile
-    import uuid
 
-    corpus = _dup_review_corpus(spark, sf_dir)
     d = tempfile.mkdtemp(prefix="dup_wm_corpus_")
-    corpus.coalesce(1).write.mode("overwrite").parquet(d)
-    stream = spark.readStream.schema(
-        spark.read.parquet(d).schema
-    ).parquet(d)
-    deduped = (
-        stream.withWatermark("date", "2 hours")
-        .dropDuplicatesWithinWatermark(["review_id", "date"])
-        .select("review_id", "date", "business_id", "user_id", "rating")
-    )
-    name = "dedup_wm_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dwm_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    try:
+        _dup_review_corpus(spark, sf_dir).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(d)
+        stream = spark.readStream.schema(
+            spark.read.parquet(d).schema
+        ).parquet(d)
+        return drain(_watermark_dedup(stream, "2 hours"))
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 _QSK_CTE = """qv AS (
@@ -4243,34 +3947,17 @@ def q_dedup_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_time_ordered_slices(
-    spark: SparkSession, df: DataFrame, n_slices: int = 4
-) -> str:
-    """Stage a batch DataFrame as ``n_slices`` parquet files whose
-    time order IS their delivery order: slice k holds the k-th
-    ntile of (ts, event_id) and gets a strictly increasing mtime, so
-    Spark's file stream source (which orders by modification time)
-    replays the fixture as an in-order multi-batch stream under
-    ``maxFilesPerTrigger=1``. Test-staging scaffolding only — the
-    production source is a keyed Kafka topic, which provides the
-    same per-key ordering contract."""
-    import glob as _glob
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="slices_")
-    w = Window.orderBy("ts", "event_id")
-    sliced = df.withColumn("_slice", F.ntile(n_slices).over(w))
-    timed: set[str] = set()
-    for i in range(1, n_slices + 1):
-        sliced.filter(F.col("_slice") == i).drop("_slice").coalesce(
-            1
-        ).write.mode("append").parquet(d)
-        for p in _glob.glob(os.path.join(d, "*.parquet")):
-            if p not in timed:
-                os.utime(p, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
-                timed.add(p)
-    return d
+def _time_ordered_stream(spark: SparkSession, d: str) -> DataFrame:
+    """The event slices staged in ``d`` (stage_ordered_slices over
+    (ts, event_id)) replayed one file per micro-batch: Spark's file
+    stream source orders by modification time, so delivery order IS
+    time order. Test-staging scaffolding only — the production source
+    is a keyed Kafka topic, which provides the same ordering."""
+    return convert_event_ts(
+        spark.readStream.schema(spark.read.parquet(d).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d)
+    )
 
 
 def q_session_window_multibatch_stream(
@@ -4289,53 +3976,16 @@ def q_session_window_multibatch_stream(
     equals the single-batch plan and shares its oracle
     (sql_session_window_stream: batch gap-sessionization filtered to
     end < final watermark)."""
-    import tempfile
-    import uuid
+    import shutil
 
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        convert_event_ts, read_events,
-    )
-
-    spark = _ensure_conf(spark)
-    ev = read_events(spark, sf_dir).select(
+    ev = read_events(_ensure_conf(spark), sf_dir).select(
         "event_id", "ts", "user_id", "value"
     )
-    d = _stage_time_ordered_slices(spark, ev)
-    stream = convert_event_ts(
-        spark.readStream.schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    sess = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(
-            F.session_window("ts", "30 minutes").alias("sw"), "user_id"
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            ROUND(F.sum("value"), 2).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-            "session_value",
-        )
-    )
-    name = "mb_sessions_" + uuid.uuid4().hex[:8]
-    q = (
-        sess.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_mbsw_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    d = stage_ordered_slices(ev, ["ts", "event_id"], 4)
+    try:
+        return drain(_native_sessions(_time_ordered_stream(spark, d)))
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def q_dedup_watermark_multibatch_stream(
@@ -4351,43 +4001,30 @@ def q_dedup_watermark_multibatch_stream(
     no key ever expires mid-replay and the emitted set equals the
     batch DISTINCT oracle regardless of delivery order (projection is
     replica-invariant, same as dedup_watermark_stream)."""
+    import shutil
     import tempfile
-    import uuid
 
-    corpus = _dup_review_corpus(spark, sf_dir)
     d = tempfile.mkdtemp(prefix="dup_wm_mb_")
-    corpus.repartition(4).write.mode("overwrite").parquet(d)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    deduped = (
-        stream.withWatermark("date", "3650 days")
-        .dropDuplicatesWithinWatermark(["review_id", "date"])
-        .select("review_id", "date", "business_id", "user_id", "rating")
-    )
-    name = "dedup_wm_mb_" + uuid.uuid4().hex[:8]
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dwmb_")
+    try:
+        _dup_review_corpus(spark, sf_dir).repartition(4).write.mode(
+            "overwrite"
+        ).parquet(d)
+        stream = (
+            spark.readStream.schema(spark.read.parquet(d).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d)
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+        return drain(_watermark_dedup(stream, "3650 days"))
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def q_trending_update_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-count leaderboard through UPDATE output mode: the same
     2-h/1-h per-type counts as trending_stream, but emitted as
-    per-batch UPSERTS into an epoch-versioned parquet sink
-    (foreachBatch) instead of waiting for watermark closure —
-    completing the output-mode matrix for the sliding-count family
+    per-batch UPSERTS into drain's epoch-versioned parquet sink
+    instead of waiting for watermark closure — completing the
+    output-mode matrix for the sliding-count family
     (append: trending_stream; complete: cms_topk_stream). Events
     arrive as four micro-batches; a window touched in several batches
     re-emits with a larger count each time, and the sink's
@@ -4397,66 +4034,21 @@ def q_trending_update_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark delay spans the fixture (nothing dropped as late, no
     state evicted before its last update). Top-3 ranking runs over
     the compacted table, one row per (window, type)."""
-    import tempfile
+    import shutil
 
-    from yelp_streaming_etl_pipeline_spark.sources.events import (
-        convert_event_ts, read_events,
-    )
-
-    spark = _ensure_conf(spark)
-    ev = read_events(spark, sf_dir).select(
+    ev = read_events(_ensure_conf(spark), sf_dir).select(
         "event_id", "ts", "event_type"
     )
-    d = _stage_time_ordered_slices(spark, ev)
-    stream = convert_event_ts(
-        spark.readStream.schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    agg = (
-        stream.withWatermark("ts", "30 days")
-        .groupBy(F.window("ts", "2 hours", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n_events",
+    d = stage_ordered_slices(ev, ["ts", "event_id"], 4)
+    try:
+        compacted = drain(
+            _sliding_type_counts(_time_ordered_stream(spark, d), "30 days"),
+            "update",
+            key=["window_start", "event_type"],
         )
-    )
-    out_dir = tempfile.mkdtemp(prefix="trend_upd_sink_")
-
-    def upsert_epoch(df: DataFrame, epoch: int) -> None:
-        df.withColumn("_epoch", F.lit(epoch)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert_epoch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_tupd_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
-    latest = Window.partitionBy("window_start", "event_type").orderBy(
-        F.desc("_epoch")
-    )
-    compacted = (
-        res.withColumn("_rn", F.row_number().over(latest))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_epoch")
-    )
-    rank_w = Window.partitionBy("window_start").orderBy(
-        F.desc("n_events"), F.asc("event_type")
-    )
-    return (
-        compacted.withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= 3)
-    )
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    return _top3_per_window(compacted)
 
 
 # ---------------- round-7 additions ----------------

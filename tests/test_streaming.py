@@ -896,3 +896,64 @@ def test_maintain_rejects_repeated_keys(spark):
             order_cols=["doc_id"],
             key="doc_id",
         )
+
+
+def test_drain_modes_leave_no_query_or_temp_dir(spark, tmp_path):
+    """drain over a two-file stream (one file per micro-batch):
+    ``update`` returns the later-epoch row of a key updated in both
+    epochs, ``append`` every row. Afterwards no query is active, and
+    neither drain nor a maintain replay has left a checkpoint or
+    staged-slices dir in the temp dir."""
+    import os
+    import tempfile
+
+    from yelp_streaming_etl_pipeline_spark.streaming.replay import (
+        drain,
+        maintain,
+    )
+
+    def leftovers():
+        return {
+            d
+            for d in os.listdir(tempfile.gettempdir())
+            if d.startswith(("ckpt_", "slices_"))
+        }
+
+    before = leftovers()
+    schema = "k STRING, v INT"
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, rows in enumerate([[("a", 1), ("b", 1)], [("a", 2)]]):
+        out = tmp_path / f"p{i}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(out))
+        next(out.glob("part-*.parquet")).rename(src / f"{i}.parquet")
+        os.utime(src / f"{i}.parquet", (1_000_000 + i, 1_000_000 + i))
+
+    def stream():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+
+    # running sums: epoch 0 emits a=1, b=1; epoch 1 re-emits a=3
+    sums = stream().groupBy("k").agg(F.sum("v").cast("int").alias("v"))
+    latest = drain(sums, "update", key="k")
+    assert sorted(tuple(r) for r in latest.collect()) == [("a", 3), ("b", 1)]
+    assert latest.columns == ["k", "v"]
+    rows = drain(stream()).collect()
+    assert sorted(tuple(r) for r in rows) == [("a", 1), ("a", 2), ("b", 1)]
+
+    docs = spark.range(6).withColumnRenamed("id", "doc_id")
+    state = maintain(
+        spark,
+        docs,
+        lambda b: b,
+        lambda acc, *_: acc,
+        order_cols=["doc_id"],
+        key="doc_id",
+    )
+    # the staged slices are gone; the state still reads (checkpointed)
+    assert sorted(r["doc_id"] for r in state.collect()) == list(range(6))
+    assert spark.streams.active == []
+    assert leftovers() == before

@@ -1355,12 +1355,9 @@ def cdc_chunk_pairs_bpe(
     chunk-set table is checkpointed once (the rolling-hash scan is
     the dominant cost and the tail reads it from four consumers);
     pair fan-out bounded by max_df^2 per chunk bucket."""
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(docs, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = docs.sparkSession.read.parquet(vocab_path)
+    vocab = bpe_vocab(docs, text_col, n_merges, export_path)
     toks = bpe_token_stream(docs, vocab, text_col, id_col)
     sets = _bpe_piece_chunk_sets(
         toks, CDC_GRAM_BPE, CDC_MOD_BPE, min_len
@@ -1397,12 +1394,9 @@ def cdc_maintain_stream_bpe(
     epoch equals batch cdc_chunk_pairs_bpe (the fixed vocab is the
     one batch trains), so the entry shares its oracle twin."""
     from ..streaming.replay import maintain
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(df, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = spark.read.parquet(vocab_path)
+    vocab = bpe_vocab(df, text_col, n_merges, export_path)
     vocab = vocab.localCheckpoint(eager=True)
     return maintain(
         spark,
@@ -2293,12 +2287,9 @@ def exact_substring_spans_bpe(
     family's machinery — one xxhash64-keyed count aggregate (no pair
     join), doc-partitioned interval merge. Connects the tokenizer and
     dedup families end to end."""
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(docs, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = docs.sparkSession.read.parquet(vocab_path)
+    vocab = bpe_vocab(docs, text_col, n_merges, export_path)
     toks = bpe_token_stream(docs, vocab, text_col, id_col)
     spans = _spans_from_cov(
         _cov_from_window_table(_array_window_hash_table(toks, L), min_occ),
@@ -2355,12 +2346,9 @@ def exact_substring_removal_bpe(
     the checkpoint, returning the fully-lazy plan (the vocab join
     recomputes once per branch) — the plan-audit path, where the
     broadcast-join lineage must stay visible end to end."""
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(docs, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = docs.sparkSession.read.parquet(vocab_path)
+    vocab = bpe_vocab(docs, text_col, n_merges, export_path)
     toks = bpe_token_stream(docs, vocab, text_col, id_col)
     if not materialize:
         spans = _spans_from_cov(
@@ -2481,12 +2469,9 @@ def exact_substring_maintain_stream_bpe(
     exact_substring_spans_bpe and the entry shares its oracle twin
     — in production the artifact would predate the stream."""
     from ..streaming.replay import maintain
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(df, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = spark.read.parquet(vocab_path)
+    vocab = bpe_vocab(df, text_col, n_merges, export_path)
     vocab = vocab.localCheckpoint(eager=True)
     spans = maintain(
         spark,
@@ -2539,12 +2524,9 @@ def exact_substring_removal_maintain_stream_bpe(
     state. Final epoch equals batch exact_substring_removal_bpe,
     sharing its oracle twin."""
     from ..streaming.replay import check_ordered_arrival, replay_fold
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(df, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = spark.read.parquet(vocab_path)
+    vocab = bpe_vocab(df, text_col, n_merges, export_path)
     vocab = vocab.localCheckpoint(eager=True)
 
     state: dict = {"toks": None, "wins": None, "max_id": None, "result": None}

@@ -503,12 +503,9 @@ def bm25_topk_bpe(
     (doc, piece) hash aggregate; everything downstream is the shared
     postings readout — query terms broadcast, top-k compiles to
     TakeOrderedAndProject."""
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(docs, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = docs.sparkSession.read.parquet(vocab_path)
+    vocab = bpe_vocab(docs, text_col, n_merges, export_path)
     return _bm25_from_postings(
         _bpe_piece_postings(docs, vocab, text_col, id_col),
         n_query_terms,
@@ -541,12 +538,9 @@ def bm25_cross_topk_bpe(
     target side reduces to n_query_terms broadcast rows before
     touching the ranked corpus; shared integer-exact readout,
     TakeOrderedAndProject top-k."""
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(docs, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = docs.sparkSession.read.parquet(vocab_path)
+    vocab = bpe_vocab(docs, text_col, n_merges, export_path)
     return _bm25_from_postings(
         _bpe_piece_postings(docs, vocab, text_col, id_col),
         n_query_terms,
@@ -635,12 +629,9 @@ def bm25_maintain_stream_bpe(
     integer-exact _bm25_from_postings (broadcast query terms,
     TakeOrderedAndProject top-k)."""
     from ..streaming.replay import maintain
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(df, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = spark.read.parquet(vocab_path)
+    vocab = bpe_vocab(df, text_col, n_merges, export_path)
     # the fixed artifact: materialize once, reuse every epoch
     vocab = vocab.localCheckpoint(eager=True)
     return maintain(
@@ -683,12 +674,9 @@ def bm25_cross_maintain_stream_bpe(
     Final epoch equals batch bm25_cross_topk_bpe (same corpus trains
     the vocab), so the entry shares its oracle twin."""
     from ..streaming.replay import maintain
-    from .tokenizer import bpe_learn, export_bpe
+    from .tokenizer import bpe_vocab
 
-    merges, vocab = bpe_learn(docs, text_col, n_merges, "char")
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = spark.read.parquet(vocab_path)
+    vocab = bpe_vocab(docs, text_col, n_merges, export_path)
     vocab = vocab.localCheckpoint(eager=True)
     target_postings = _bpe_piece_postings(
         target, vocab, text_col, id_col

@@ -275,6 +275,24 @@ def export_bpe(
     return merges_path, vocab_path
 
 
+def bpe_vocab(
+    docs: DataFrame,
+    text_col: str,
+    n_merges: int,
+    export_path: str | None,
+    alphabet: str = "char",
+) -> DataFrame:
+    """The segmented-word table (w, f, toks) learned over ``docs``
+    (bpe_learn). With ``export_path`` the learned artifacts are
+    written there (export_bpe) and the vocab is re-read from parquet
+    — the train-once / tokenize-anywhere path."""
+    merges, vocab = bpe_learn(docs, text_col, n_merges, alphabet)
+    if export_path is None:
+        return vocab
+    _, vocab_path = export_bpe(merges, vocab, export_path)
+    return docs.sparkSession.read.parquet(vocab_path)
+
+
 def tokenize_with_vocab(
     docs: DataFrame,
     vocab: DataFrame,
@@ -318,10 +336,7 @@ def bpe_token_counts(
     the word count and total BPE token count. With ``export_path``
     the learned artifacts are round-tripped through parquet first
     (write + re-read) — the train-once / tokenize-anywhere path."""
-    merges, vocab = bpe_learn(docs, text_col, n_merges, alphabet)
-    if export_path is not None:
-        _, vocab_path = export_bpe(merges, vocab, export_path)
-        vocab = docs.sparkSession.read.parquet(vocab_path)
+    vocab = bpe_vocab(docs, text_col, n_merges, export_path, alphabet)
     return tokenize_with_vocab(docs, vocab, text_col, id_col, alphabet)
 
 

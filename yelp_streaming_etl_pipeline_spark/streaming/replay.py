@@ -1,6 +1,21 @@
-"""Staged micro-batch replay and the ``maintain`` combinator behind
-the *_maintain_stream entries (BM25/CDC/exact-substring/DSIR/SimHash
+"""Run-to-completion streaming: ``drain`` for one-shot queries, the
+staged micro-batch replay, and the ``maintain`` combinator behind the
+*_maintain_stream entries (BM25/CDC/exact-substring/DSIR/SimHash
 state, graph k-core/LPA/PageRank, bigram-LM counts, bottom-k samples).
+
+Every query here runs to completion as one execution mode of the
+engine: a temp checkpoint dir, ``trigger(availableNow=True)``,
+``start`` + ``awaitTermination``, then ``stop()`` and removal of the
+checkpoint dir in a ``finally`` — so no query outlives its call and
+no checkpoint dir outlives its query.
+
+``drain(stream, mode, key)`` hands back what a streaming query
+emitted. ``append`` / ``complete`` output lands in a uniquely named
+memory sink, returned as ``spark.table(name)``. ``update`` output is
+stamped with its epoch and appended to a parquet sink; the result is
+the latest-epoch row per ``key`` (an idempotent upsert's compaction,
+distributed, correct at any micro-batch split). That sink dir stays:
+the returned DataFrame reads it lazily.
 
 Replay: a batch DataFrame is staged as ``n_slices`` mtime-ordered
 parquet files and re-read through the file stream source under
@@ -12,6 +27,8 @@ arrival order matters). Slicing is ntile over ``order_cols``, so
 every engine and every run stages identical batches, and a fold
 keyed on "first occurrence wins" sees first occurrences in global
 order — state is never re-keyed retroactively by a later batch.
+The staged slices are removed once the replay ends, so a fold must
+materialize (localCheckpoint) anything it keeps from a batch.
 
 ``maintain`` is the one fold skeleton every maintenance entry with a
 single state table shares. Per epoch:
@@ -51,6 +68,7 @@ import glob
 import os
 import shutil
 import tempfile
+import uuid
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -79,6 +97,54 @@ def stage_ordered_slices(
     return d
 
 
+def _run_to_completion(writer) -> None:
+    """Run the query ``writer`` (a DataStreamWriter) describes under
+    ``trigger(availableNow=True)`` with a temp checkpoint dir, wait
+    for it, then stop it and remove the dir — also when it fails."""
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    q = None
+    try:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def drain(
+    stream: DataFrame,
+    mode: str = "append",
+    key: str | Sequence[str] | None = None,
+) -> DataFrame:
+    """Run ``stream`` to completion in output ``mode`` and return what
+    it emitted: every emitted row for ``append`` / ``complete`` (a
+    memory sink), the latest-epoch row per ``key`` for ``update``."""
+    spark = stream.sparkSession
+    writer = stream.writeStream.outputMode(mode)
+    if mode != "update":
+        name = "drain_" + uuid.uuid4().hex[:8]
+        _run_to_completion(writer.format("memory").queryName(name))
+        return spark.table(name)
+    out = tempfile.mkdtemp(prefix="upd_sink_")
+
+    def upsert_epoch(df: DataFrame, epoch: int) -> None:
+        df.withColumn("_epoch", F.lit(epoch)).write.mode("append").parquet(out)
+
+    _run_to_completion(writer.foreachBatch(upsert_epoch))
+    latest = Window.partitionBy(key).orderBy(F.desc("_epoch"))
+    return (
+        spark.read.parquet(out)
+        .withColumn("_rn", F.row_number().over(latest))
+        .filter(F.col("_rn") == 1)
+        .drop("_epoch", "_rn")
+    )
+
+
 def replay_fold(
     spark,
     df: DataFrame,
@@ -91,9 +157,8 @@ def replay_fold(
     owns its accumulated state). Asserts at least ``n_slices`` epochs
     ran; returns the epoch count.
 
-    The streaming checkpoint dir is removed once the query has
-    terminated; the staged slices stay, because fold state may still
-    read them lazily."""
+    The staged slices are removed once the query has stopped: state
+    the fold keeps must not read ``batch_df`` lazily."""
     d = stage_ordered_slices(df, list(order_cols or df.columns), n_slices)
     epochs = {"n": 0}
 
@@ -101,23 +166,15 @@ def replay_fold(
         fold(batch_df, epoch_id)
         epochs["n"] += 1
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_replay_")
-    q = None
     try:
-        q = (
+        _run_to_completion(
             spark.readStream.schema(df.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(d)
             .writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     finally:
-        if q is not None:
-            q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(d, ignore_errors=True)
     assert epochs["n"] >= n_slices, (
         f"expected >= {n_slices} micro-batches, got {epochs['n']}"
     )
